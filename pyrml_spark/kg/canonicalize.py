@@ -37,7 +37,7 @@ class ConvergenceError(RuntimeError):
     pass
 
 
-# driver union-find crossover (shared with kg/pipeline.py): below this many
+# driver union-find crossover (connected_components_auto): below this many
 # edges the iterative distributed loop's per-round job latency dominates and
 # a driver-side union-find over the collected edge list is strictly faster
 # while producing the identical lexicographic-min labels.
@@ -74,30 +74,46 @@ def _driver_union_find(edges_rows) -> list:
 
 def connected_components_auto(
     edges: DataFrame,
-    max_driver_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
+    edge_rows: Optional[int] = None,
+    on_event: Optional[Callable[[str, dict], None]] = None,
     **kw,
 ) -> DataFrame:
-    """:func:`connected_components` with the driver union-find crossover.
+    """:func:`connected_components` with the driver union-find crossover —
+    the one place that decides between the two.
 
-    The edge table is checkpointed eagerly (materializing the — typically
-    expensive — upstream pair join exactly once), counted, and when the
-    count is below ``max_driver_edges`` the components are solved on the
-    driver (Arrow transfer both ways) instead of running the iterative
-    min-label loop, whose per-round fixed job cost dominates at that size.
+    ``edge_rows`` is the caller's known edge count (a checkpoint manifest or
+    a persisted, counted stage). Without it the edge table is checkpointed
+    eagerly (materializing the — typically expensive — upstream pair join
+    exactly once) and counted. At or below
+    ``DRIVER_UNION_FIND_MAX_EDGES`` the components are solved on the driver
+    (Arrow transfer both ways) instead of running the iterative min-label
+    loop, whose per-round fixed job cost dominates at that size; the count
+    comes first, so an over-threshold edge list is never collected.
     Identical (node, component) output either way (lexicographic-min
     labels; pinned by tests). Above the gate the distributed loop runs
-    unchanged — the 100 TB path."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    if edges.count() <= max_driver_edges:
+    unchanged — the 100 TB path.
+
+    ``on_event(name, payload)`` receives the branch taken:
+    ``cc_driver_union_find`` with the edge and label counts, or one
+    ``cc_iteration`` per round of the distributed loop."""
+    if edge_rows is None:
+        edges = edges.select("src", "dst").localCheckpoint(eager=True)
+        edge_rows = edges.count()
+    if edge_rows <= DRIVER_UNION_FIND_MAX_EDGES:
         import pandas as pd
 
-        epdf = edges.toPandas()
+        epdf = edges.select("src", "dst").toPandas()
         pairs = _driver_union_find(
             zip(epdf["src"].tolist(), epdf["dst"].tolist()))
-        spark = edges.sparkSession
-        return spark.createDataFrame(
+        if on_event:
+            on_event("cc_driver_union_find",
+                     {"edges": int(edge_rows), "labels": len(pairs)})
+        return edges.sparkSession.createDataFrame(
             pd.DataFrame(pairs, columns=["node", "component"]),
             schema="node string, component string")
+    if on_event:
+        kw["on_iteration"] = lambda it, changed: on_event(
+            "cc_iteration", {"iteration": it, "labels_changed": changed})
     return connected_components(edges, **kw)
 
 

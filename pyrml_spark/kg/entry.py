@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import MAX_SPANS, MIN_SPANS, N_PERSONS, N_PLACES, generate_documents
-from .extract import mentions_native, sameas_candidates
-from .canonicalize import canonical_mapping
+from .extract import (assemble_canonical_triples, media_spans,
+                      mentions_native, sameas_candidates)
+from .canonicalize import canonical_mapping, connected_components_auto
 from .pipeline import KGPipelineConfig, run_pipeline
 
 _N_DOCS_CHECK = 300
@@ -103,24 +104,19 @@ def kg_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_pipeline_fused_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused/throughput assembly against the SAME oracle as the
-    checkpointed mode: driver union-find canonicalization (the fused path's
-    small-edge-set crossover) + single-DAG category-wise assembly, no
-    checkpoints — where kg_pipeline_triples uses the iterative distributed
-    CC and per-stage checkpointing. Two different canonicalization
-    algorithms and orchestrations, one independent SQL rederivation — all
-    three must agree byte-for-byte."""
-    from .extract import (assemble_canonical_triples, media_spans,
-                          mentions_native, sameas_candidates)
-    from .pipeline import _driver_union_find
-
+    checkpointed mode: canonicalization through the union-find crossover
+    (driver union-find at this corpus size) + single-DAG category-wise
+    assembly, no checkpoints — where kg_canonical_mapping uses the
+    iterative distributed CC and kg_pipeline_triples per-stage
+    checkpointing. Two different canonicalization algorithms and
+    orchestrations, one independent SQL rederivation — all three must agree
+    byte-for-byte."""
     docs = _docs(spark)
     mentions = mentions_native(docs)
-    # ungated collect is fine HERE ONLY: _N_DOCS_CHECK bounds the edge set.
-    # Production code must copy run_pipeline_fused (kg/pipeline.py), which
-    # counts the edges BEFORE collecting and falls back to distributed CC.
-    rows = [(r["src"], r["dst"]) for r in sameas_candidates(mentions).collect()]
-    mapping = spark.createDataFrame(_driver_union_find(rows),
-                                    ["entity", "canonical"])
+    # the crossover counts the edges BEFORE collecting any, and falls back
+    # to distributed CC above its gate
+    mapping = connected_components_auto(sameas_candidates(mentions)).select(
+        F.col("node").alias("entity"), F.col("component").alias("canonical"))
     return assemble_canonical_triples(mentions, media_spans(docs), mapping)
 
 

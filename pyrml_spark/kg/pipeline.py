@@ -7,22 +7,33 @@
       → subject/object rewrite through the canonical mapping
       → dedup → partitioned (s,p,o,g) table + N-Quads-ready strings
 
-Every stage is checkpointed + manifest-recorded (resumable); the output
-table is partitioned by a subject hash bucket (``pmod(xxhash64(s), N)``) so
-downstream point lookups and joins prune partitions. AQE + explicit
-repartition sizes handle skew on hot subjects at scale.
+One pipeline body, two stage stores (:mod:`pyrml_spark.kg.lineage`):
+
+* :func:`run_pipeline` — :class:`~pyrml_spark.kg.lineage.StageRunner`:
+  every stage is checkpointed as parquet + manifest-recorded (resumable,
+  per-partition lineage).
+* :func:`run_pipeline_fused` —
+  :class:`~pyrml_spark.kg.lineage.MemoryStore`: one lazy DAG, the reused
+  stages persisted in memory, a single partitioned write (throughput path).
+
+The stores differ only in where a stage lives, so both return the same
+triples by construction. The driver union-find vs distributed-CC decision
+is :func:`~pyrml_spark.kg.canonicalize.connected_components_auto`'s, fed
+the edge count the store already knows. The output table is partitioned by
+a subject hash bucket (``pmod(xxhash64(s), N)``) so downstream point
+lookups and joins prune partitions. AQE + explicit repartition sizes handle
+skew on hot subjects at scale.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import canonical_mapping
+from .canonicalize import connected_components_auto
 from .datagen import generate_documents
 from .extract import (
     assemble_canonical_triples,
@@ -31,7 +42,7 @@ from .extract import (
     mentions_pandas,
     sameas_candidates,
 )
-from .lineage import StageRunner, fingerprint
+from .lineage import MemoryStore, StageRunner, fingerprint
 
 
 @dataclass
@@ -41,18 +52,10 @@ class KGPipelineConfig:
     n_subject_buckets: int = 32
     output_partitions: int = 0          # 0 = one file per bucket
     cc_max_iter: int = 25
-    collect_partition_lineage: bool = True  # off for pure-throughput benches
     gen_partitions: int = 0                 # fixed datagen partitioning (benches)
     final_repartition: bool = True          # False: skip the bucket exchange
                                             # (fused bench path; dedup's own
                                             # shuffle already colocates rows)
-    checkpoint_dir: Optional[str] = None    # stage-parquet location when it
-                                            # should differ from work_dir
-                                            # (benches: tmpfs; cluster: the
-                                            # object-store checkpoint prefix)
-    collect_extra_metrics: bool = True      # distinct-subject/graph counts on
-                                            # the final table (one extra agg
-                                            # job; off for throughput runs)
 
 
 def _public_input_tag(documents: DataFrame) -> str:
@@ -97,12 +100,42 @@ def run_pipeline(
     input_tag: Optional[str] = None,
 ) -> DataFrame:
     """Returns the final (s,p,o,g,subject_bucket) DataFrame; all stages
-    checkpointed under ``work_dir`` with manifest lineage."""
-    runner = StageRunner(
-        spark, work_dir,
-        collect_partition_lineage=config.collect_partition_lineage,
-        stage_dir=config.checkpoint_dir,
-    )
+    checkpointed under ``work_dir`` with manifest lineage.
+
+    ``input_tag`` names an external ``documents`` table (dataset name +
+    version) in the stage fingerprints, else stage fingerprints would
+    collide across different caller-supplied inputs and resume would reuse
+    stale checkpoints. Omitted, a tag is derived from public surface only
+    (:func:`_public_input_tag`)."""
+    if documents is not None and input_tag is None:
+        input_tag = _public_input_tag(documents)
+    return _build(spark, StageRunner(spark, work_dir), config, documents,
+                  input_tag)
+
+
+def run_pipeline_fused(
+    spark: SparkSession,
+    out_dir: str,
+    config: KGPipelineConfig = KGPipelineConfig(),
+    documents: Optional[DataFrame] = None,
+) -> DataFrame:
+    """:func:`run_pipeline`'s body over the in-memory store: no
+    intermediate parquet, one partitioned write to ``out_dir``. No
+    ``input_tag`` parameter: fused mode keeps no checkpoints, so there is
+    no resume identity to name. Use for throughput benching / one-shot
+    runs; use :func:`run_pipeline` when stage-level resumability and
+    lineage are required."""
+    store = MemoryStore(spark, out_dir)
+    try:
+        return _build(spark, store, config, documents, None)
+    finally:
+        store.release()
+
+
+def _build(spark: SparkSession, store: Union[StageRunner, MemoryStore],
+           config: KGPipelineConfig, documents: Optional[DataFrame],
+           input_tag: Optional[str]) -> DataFrame:
+    """The pipeline body; ``store`` decides where each stage lives."""
     cfg_fp = fingerprint(
         config.n_docs, config.use_pandas_extractor, config.n_subject_buckets,
         "v1",
@@ -110,71 +143,40 @@ def run_pipeline(
 
     if documents is None:
         docs_fp = fingerprint("docs", cfg_fp)
-        docs = runner.run(
+        docs = store.run(
             "documents", docs_fp,
-            lambda: generate_documents(spark, config.n_docs),
+            lambda: generate_documents(spark, config.n_docs,
+                                       partitions=config.gen_partitions),
         )
     else:
-        # external input: mix an identity of the DataFrame into the
-        # fingerprint, else stage fingerprints collide across different
-        # caller-supplied inputs and resume would reuse stale checkpoints.
-        # Caller should pass input_tag for a stable, resumable identity
-        # (dataset name + version). Fallback derives a tag from PUBLIC
-        # surface only — schema JSON + a bounded content sample hash (the
-        # earlier analyzed-plan string was a private JVM API that breaks
-        # under Spark Connect and embeds session-specific expression ids, so
-        # the same input never resumed across sessions).
-        tag = input_tag or _public_input_tag(documents)
-        docs_fp = fingerprint("docs-ext", cfg_fp, tag)
-        docs = documents
+        docs_fp = fingerprint("docs-ext", cfg_fp, input_tag)
+        docs = store.keep_input(documents)
 
     extractor = mentions_pandas if config.use_pandas_extractor else mentions_native
     mentions_fp = fingerprint("mentions", docs_fp, config.use_pandas_extractor)
-    mentions = runner.run("mentions", mentions_fp, lambda: extractor(docs))
+    mentions = store.run("mentions", mentions_fp, lambda: extractor(docs))
 
     media_fp = fingerprint("media", docs_fp)
-    media = runner.run("media_spans", media_fp, lambda: media_spans(docs))
+    media = store.run("media_spans", media_fp, lambda: media_spans(docs))
 
     edges_fp = fingerprint("edges", mentions_fp)
-    edges = runner.run("sameas_edges", edges_fp,
-                       lambda: sameas_candidates(mentions))
+    edges = store.run("sameas_edges", edges_fp,
+                      lambda: sameas_candidates(mentions))
 
     mapping_fp = fingerprint("mapping", edges_fp, config.cc_max_iter)
-    # the edges stage just ran (or resumed), so its row count is already in
-    # the manifest — the same scale gate as run_pipeline_fused costs no job
-    edge_rows = runner.stage_rows("sameas_edges", edges_fp)
-
-    def build_mapping() -> DataFrame:
-        if edge_rows is not None and edge_rows <= DRIVER_UNION_FIND_MAX_EDGES:
-            # small edge set: the distributed min-label loop pays several
-            # job round-trips per iteration (~3-4 s at bench scale) which
-            # dominate when the edges fit in driver memory; driver
-            # union-find produces the identical (entity, canonical) table
-            # (same lexicographic-min labels — the fused path's shortcut,
-            # equality pinned by tests). Arrow both ways, as in fused mode.
-            import pandas as pd
-
-            epdf = edges.toPandas()
-            pairs = _driver_union_find(
-                zip(epdf["src"].tolist(), epdf["dst"].tolist()))
-            runner.record_event(
-                "cc_driver_union_find",
-                {"edges": int(edge_rows), "labels": len(pairs)})
-            return spark.createDataFrame(
-                pd.DataFrame(pairs, columns=["entity", "canonical"]),
-                schema="entity string, canonical string")
-        return canonical_mapping(
+    mapping = store.run(
+        "canonical_mapping", mapping_fp,
+        lambda: connected_components_auto(
             edges,
+            edge_rows=store.stage_rows("sameas_edges", edges_fp),
+            on_event=store.record_event,
             max_iter=config.cc_max_iter,
-            on_iteration=lambda it, changed: runner.record_event(
-                "cc_iteration", {"iteration": it, "labels_changed": changed}
-            ),
-        )
-
-    mapping = runner.run("canonical_mapping", mapping_fp, build_mapping)
-    # manifest already holds the mapping's row count — reuse it for the
+        ).select(F.col("node").alias("entity"),
+                 F.col("component").alias("canonical")),
+    )
+    # the store already knows the mapping's size — reuse it for the
     # conditional-broadcast decision instead of a probe job
-    mapping_rows = runner.stage_rows("canonical_mapping", mapping_fp)
+    mapping_rows = store.stage_rows("canonical_mapping", mapping_fp)
 
     triples_fp = fingerprint("triples", mentions_fp, media_fp, mapping_fp)
 
@@ -188,6 +190,8 @@ def run_pipeline(
             "subject_bucket",
             F.pmod(F.xxhash64("s"), F.lit(config.n_subject_buckets)).cast("int"),
         )
+        if not config.final_repartition:
+            return out
         # cluster rows by bucket before partitionBy: without this every task
         # writes into every bucket dir (tasks × buckets small files).
         # RANGE partitioning on (bucket, s) instead of hash-on-bucket: with
@@ -202,119 +206,22 @@ def run_pipeline(
         # subtree a second time before the write — checkpointed, the
         # sampler and the write share one materialization (guide §1.2)
         out = out.localCheckpoint(eager=False)
-        out = out.repartitionByRange(
+        return out.repartitionByRange(
             config.output_partitions or config.n_subject_buckets,
             "subject_bucket", "s",
         )
-        return out
 
-    extra = None
-    if config.collect_extra_metrics:
-        # ONE multi-aggregate job, not one full-table job per metric
-        def extra(df: DataFrame) -> dict:
-            row = df.agg(
-                F.countDistinct("s").alias("distinct_subjects"),
-                F.countDistinct("g").alias("graphs"),
-            ).collect()[0]
-            return {"distinct_subjects": row["distinct_subjects"],
-                    "graphs": row["graphs"]}
+    # ONE multi-aggregate job, not one full-table job per metric
+    def extra(df: DataFrame) -> dict:
+        row = df.agg(
+            F.countDistinct("s").alias("distinct_subjects"),
+            F.countDistinct("g").alias("graphs"),
+        ).collect()[0]
+        return {"distinct_subjects": row["distinct_subjects"],
+                "graphs": row["graphs"]}
 
-    return runner.run(
+    return store.run(
         "triples", triples_fp, build_triples,
         partition_by=["subject_bucket"],
         extra_metrics=extra,
     )
-
-
-# ---------------------------------------------------------------------------
-# fused mode: one Spark job end-to-end (throughput path)
-# ---------------------------------------------------------------------------
-
-# shared with canonicalize.py (moved there r9 so dedup's CC can reuse the
-# same crossover); re-exported here for existing importers
-from .canonicalize import (  # noqa: E402
-    DRIVER_UNION_FIND_MAX_EDGES,
-    _driver_union_find,
-)
-
-
-def run_pipeline_fused(
-    spark: SparkSession,
-    out_dir: str,
-    config: KGPipelineConfig = KGPipelineConfig(),
-    documents: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Same logical pipeline as :func:`run_pipeline` but fused into one
-    lazy DAG with a single partitioned write: mentions are persisted in
-    memory (consumed by both the edge derivation and the triple build), the
-    canonical mapping is computed with driver union-find when the edge set
-    is small (broadcast back as a mapping table), and no intermediate
-    parquet checkpoints are written.
-
-    ``documents`` supplies an external corpus (same shape as
-    :func:`~pyrml_spark.kg.datagen.generate_documents`: BASELINE.json's
-    input_hint) — omitted, the synthetic corpus is generated. No
-    ``input_tag`` parameter: fused mode keeps no checkpoints, so there is
-    no resume identity to name.
-
-    Use for throughput benching / one-shot runs; use :func:`run_pipeline`
-    when stage-level resumability and lineage are required. Results are
-    identical (tests assert it)."""
-
-    if documents is None:
-        docs = generate_documents(spark, config.n_docs,
-                                  partitions=config.gen_partitions).persist()
-    else:
-        docs = documents.persist()
-    extractor = mentions_pandas if config.use_pandas_extractor else mentions_native
-    mentions = extractor(docs).persist()
-    edges = sameas_candidates(mentions).persist()
-    # size gate BEFORE any collect: a count() proves the set fits (or
-    # doesn't) without ever shipping an over-threshold edge list to the
-    # driver — collecting first would be the OOM itself at real scale.
-    # (A plain count, not limit(N+1).count(): CollectLimit's incremental
-    # partition scans bypass and partially populate the persist cache.)
-    probe = edges.count()
-    if probe <= DRIVER_UNION_FIND_MAX_EDGES:
-        import pandas as pd
-
-        # Arrow both ways: .collect()'s per-Row materialization and
-        # createDataFrame-from-tuples' per-row pickling are driver-serial
-        # costs that Amdahl straight off the scaling efficiency; toPandas /
-        # from-pandas move the same data as Arrow record batches.
-        epdf = edges.toPandas()
-        pairs = _driver_union_find(
-            zip(epdf["src"].tolist(), epdf["dst"].tolist()))
-        mapping = spark.createDataFrame(
-            pd.DataFrame(pairs, columns=["entity", "canonical"]))
-        mapping_rows = len(pairs)
-    else:  # pragma: no cover - exercised only at true scale
-        # Persist the CC fixpoint result BEFORE anything consumes it:
-        # unpersisted, maybe_broadcast's size probe would re-run the whole
-        # iterative fixpoint once, and the two rewrite joins (s-side and
-        # o-side) would run it again each. The count over the persisted
-        # table doubles as the broadcast row hint, so no probe job either.
-        mapping = canonical_mapping(
-            edges, max_iter=config.cc_max_iter).persist()
-        mapping_rows = mapping.count()
-    canon = assemble_canonical_triples(mentions, media_spans(docs), mapping,
-                                       mapping_rows=mapping_rows)
-    out = canon.withColumn(
-        "subject_bucket",
-        F.pmod(F.xxhash64("s"), F.lit(config.n_subject_buckets)).cast("int"),
-    )
-    if config.final_repartition:
-        # range-partitioned for balanced writer tasks (see run_pipeline);
-        # lazy checkpoint so the range sampler and the write share one
-        # materialization of the assembly
-        out = out.localCheckpoint(eager=False)
-        out = out.repartitionByRange(
-            config.output_partitions or config.n_subject_buckets,
-            "subject_bucket", "s")
-    out.write.mode("overwrite").partitionBy("subject_bucket").parquet(out_dir)
-    edges.unpersist()
-    mentions.unpersist()
-    docs.unpersist()
-    if mapping.is_cached:  # at-scale distributed-CC branch persisted it
-        mapping.unpersist()
-    return spark.read.parquet(out_dir)

@@ -207,21 +207,82 @@ def test_public_input_tag_sees_whole_dataset(spark):
         generate_documents(spark, 200))  # still deterministic
 
 
-def test_fused_pipeline_never_collects_over_threshold(spark, tmp_path, monkeypatch):
-    """Scale guard (round-1 ADVICE): when the edge count exceeds
-    DRIVER_UNION_FIND_MAX_EDGES the fused path must go straight to the
-    distributed canonical mapping WITHOUT collecting edges to the driver."""
-    from pyrml_spark.kg import pipeline as P
+def _force_distributed_cc(monkeypatch):
+    from pyrml_spark.kg import canonicalize as C
 
-    monkeypatch.setattr(P, "DRIVER_UNION_FIND_MAX_EDGES", 1)
+    monkeypatch.setattr(C, "DRIVER_UNION_FIND_MAX_EDGES", 1)
 
     def boom(_rows):
         raise AssertionError("driver union-find must not run over threshold")
 
-    monkeypatch.setattr(P, "_driver_union_find", boom)
-    cfg = P.KGPipelineConfig(n_docs=150, use_pandas_extractor=False)
-    out = P.run_pipeline_fused(spark, str(tmp_path / "out"), cfg)
+    monkeypatch.setattr(C, "_driver_union_find", boom)
+
+
+def test_fused_pipeline_never_collects_over_threshold(spark, tmp_path, monkeypatch):
+    """Scale guard (round-1 ADVICE): when the edge count exceeds
+    DRIVER_UNION_FIND_MAX_EDGES the fused path must go straight to the
+    distributed canonical mapping WITHOUT collecting edges to the driver."""
+    from pyrml_spark.kg.pipeline import run_pipeline_fused
+
+    _force_distributed_cc(monkeypatch)
+    cfg = KGPipelineConfig(n_docs=150, use_pandas_extractor=False)
+    out = run_pipeline_fused(spark, str(tmp_path / "out"), cfg)
     assert out.count() > 0  # distributed path produced the table
+
+
+def test_checkpointed_pipeline_never_collects_over_threshold(spark, tmp_path,
+                                                             monkeypatch):
+    """The same scale guard for the checkpointed store, whose manifest
+    records the branch taken."""
+    _force_distributed_cc(monkeypatch)
+    cfg = KGPipelineConfig(n_docs=150, use_pandas_extractor=False)
+    out = run_pipeline(spark, str(tmp_path / "w"), cfg)
+    assert out.count() > 0
+    with open(tmp_path / "w" / "manifest.jsonl") as f:
+        stages = {json.loads(line)["stage"] for line in f}
+    assert "cc_iteration" in stages
+    assert "cc_driver_union_find" not in stages
+
+
+def _both_stores(spark, tmp_path, cfg, docs):
+    """(s,p,o,g) sets of the checkpointed and the fused pipeline over the
+    same external documents."""
+    from pyrml_spark.kg.pipeline import run_pipeline_fused
+
+    a = run_pipeline(spark, str(tmp_path / "w"), cfg, documents=docs,
+                     input_tag="t")
+    b = run_pipeline_fused(spark, str(tmp_path / "out"), cfg, documents=docs)
+    return a, b
+
+
+def test_pipeline_zero_sameas_edges(spark, tmp_path):
+    """A corpus without alias mentions has no sameAs candidates: both
+    stores must still canonicalize (to the identity) and agree."""
+    cfg = KGPipelineConfig(n_docs=999_999, use_pandas_extractor=False)
+    docs = generate_documents(spark, 150)
+    aliased = mentions_native(docs).filter(
+        F.col("surface").contains("_aka")).select("doc_id")
+    corpus_path = str(tmp_path / "corpus")
+    docs.join(aliased, "doc_id", "left_anti").write.parquet(corpus_path)
+    docs = spark.read.parquet(corpus_path)
+    assert sameas_candidates(mentions_native(docs)).count() == 0
+    a, b = _both_stores(spark, tmp_path, cfg, docs)
+    a = {tuple(r) for r in a.select("s", "p", "o", "g").collect()}
+    b = {tuple(r) for r in b.select("s", "p", "o", "g").collect()}
+    assert a == b and len(a) > 0
+
+
+def test_pipeline_empty_documents(spark, tmp_path):
+    """An empty external documents table yields an empty triples table
+    from both stores, and on resume, not a schema-inference error."""
+    cfg = KGPipelineConfig(n_docs=999_999, use_pandas_extractor=False)
+    docs = generate_documents(spark, 10).limit(0)
+    # _both_stores' checkpointed run then resumes from this one
+    fresh = run_pipeline(spark, str(tmp_path / "w"), cfg, documents=docs,
+                         input_tag="t")
+    for out in (fresh, *_both_stores(spark, tmp_path, cfg, docs)):
+        assert out.columns == ["s", "p", "o", "g", "subject_bucket"]
+        assert out.count() == 0
 
 
 def test_external_documents_get_distinct_fingerprints(spark, tmp_path):
@@ -253,8 +314,6 @@ def test_connected_components_auto_matches_distributed(spark):
             + [("z", "z")])
     edges = spark.createDataFrame(rows, ["src", "dst"])
     via_driver = {tuple(r) for r in connected_components_auto(edges).collect()}
-    via_dist = {tuple(r)
-                for r in connected_components_auto(
-                    edges, max_driver_edges=0).collect()}
+    via_dist = {tuple(r) for r in connected_components(edges).collect()}
     assert via_driver == via_dist
     assert len(via_driver) == 53  # 41 chain + 11 star + 1 singleton
