@@ -11,45 +11,60 @@ Catalyst optimizes end-to-end:
 
   source scan (all-string CSV / JSON / Parquet, column-pruned)
     → crml:condition filter (translated to Spark SQL — never eval())
-    → ONE wide projection: subject term + array<struct<p,o,g>> of all
-      (predicate, object, graph) combinations incl. rr:class pairs
-    → explode(pairs)                      [D2+D3+D4 in one shuffle-free pass]
+    → function maps as raw columns (one ``withColumns``)
+    → ONE ``selectExpr``: subject term + ``inline(array(named_struct(p, o,
+      g), …))`` over all (predicate, object, graph) combinations incl.
+      rr:class pairs, exploded straight into columns p, o, g
+                                          [D2+D3+D4 in one shuffle-free pass]
     → per referencing-object-map: equi-join child×parent (broadcast when the
       parent is small, AQE skew-join otherwise)                        [D5/D6]
     → unionByName across TriplesMaps                                     [D7]
     → s/p/o null drop [D9] → dropDuplicates (RDF set semantics)          [D8]
 
-Column pruning across the mapping happens for free: every term map is a
-native Column expression, so Catalyst prunes the source scan to exactly the
-referenced columns (SURVEY.md §4).
+Term maps compile to Spark SQL text (``terms.py``), not ``F.*`` Column
+trees: on the 8-map benchmark document, building the Column trees cost
+≈8,000 py4j round trips (≈1.3 s of driver time) per compile; handing each
+branch's text to ``selectExpr`` costs a few per branch. Column pruning
+across the mapping still happens for free: Catalyst resolves the text
+against the source and prunes the scan to exactly the referenced columns
+(SURVEY.md §4).
 """
 
 from __future__ import annotations
 
 import os
 import re
-from collections import Counter
 from functools import reduce
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import rdfterms as R
 from .model import (
     MappingPlan,
-    PredicateObjectMap,
     ReferencingObjectMap,
     SubjectMap,
     TriplesMap,
 )
+from .scan import parallelize_scan
 from .sources import SourceLoader
-from .terms import CompileCtx, compile_term, render_value, raw_value
+from .terms import (
+    NULL_STRING,
+    CompileCtx,
+    compile_term,
+    function_raw,
+    render_value,
+    source_col,
+    sql_ident,
+    sql_lit,
+    with_raws,
+)
 
 OUTPUT_SCHEMA = ["s", "p", "o", "g"]
 
-_PAIR_STRUCT = "struct<p:string,o:string,g:string>"
+_PAIRS_TYPE = "array<struct<p:string,o:string,g:string>>"
 
 
 class CompileError(ValueError):
@@ -72,9 +87,9 @@ _STR_LIT = re.compile(r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")")
 def translate_condition(cond: str) -> str:
     if _FORBIDDEN.search(cond):
         raise CompileError(f"unsupported crml:condition expression: {cond!r}")
-    s = re.sub(r"df\[\s*'([^']+)'\s*\]", lambda m: f"`{m.group(1)}`", cond)
-    s = re.sub(r'df\[\s*"([^"]+)"\s*\]', lambda m: f"`{m.group(1)}`", s)
-    s = re.sub(r"\bdf\.([A-Za-z_]\w*)", lambda m: f"`{m.group(1)}`", s)
+    s = re.sub(r"df\[\s*'([^']+)'\s*\]", lambda m: sql_ident(m.group(1)), cond)
+    s = re.sub(r'df\[\s*"([^"]+)"\s*\]', lambda m: sql_ident(m.group(1)), s)
+    s = re.sub(r"\bdf\.([A-Za-z_]\w*)", lambda m: sql_ident(m.group(1)), s)
     parts = _STR_LIT.split(s)
     for i in range(0, len(parts), 2):  # odd indexes are quoted literals
         p = parts[i].replace("&", " AND ").replace("|", " OR ")
@@ -83,6 +98,27 @@ def translate_condition(cond: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+
+
+def _pair(p: str, o: str, g: str) -> str:
+    return f"named_struct('p', {p}, 'o', {o}, 'g', CAST({g} AS STRING))"
+
+
+def _pair_array(items: List[Tuple[str, bool]]) -> str:
+    """``(sql, is_array)`` items, in order, as one array<struct<p,o,g>>: a
+    single pair is one element, a multi-valued object a whole array."""
+    if not any(is_array for _, is_array in items):
+        return f"array({', '.join(sql for sql, _ in items)})"
+    return "flatten(array(" + ", ".join(
+        sql if is_array else f"array({sql})" for sql, is_array in items) + "))"
+
+
+def _explode(df: DataFrame, s: str, pairs: str) -> DataFrame:
+    # inline() explodes the structs straight into columns p, o, g
+    return df.selectExpr(f"{s} AS s", f"inline({pairs})")
+
+
+Branch = Callable[[DataFrame], DataFrame]
 
 
 class RMLCompiler:
@@ -116,16 +152,48 @@ class RMLCompiler:
         # pyrml_api.py:705): plain literals from natively-typed source
         # columns (JSON/parquet) get an inferred xsd datatype
         self.infer_literal_datatypes = infer_literal_datatypes
+        self._sources: Dict[tuple, Tuple[DataFrame, T.StructType]] = {}
+        self._schemas: Dict[tuple, T.StructType] = {}
 
     # -- source handling -----------------------------------------------------
-    def _source_df(self, tm: TriplesMap) -> DataFrame:
-        dfs = [self.loader.load(ls) for ls in tm.sources]
-        if not dfs:
+    def _scan(self, ls, floor: bool) -> DataFrame:
+        df = self.loader.load(ls)
+        path = self.loader.scan_path(ls) if floor else None
+        return parallelize_scan(self.spark, df, path) if path else df
+
+    def _source(self, tm: TriplesMap,
+                floor: bool = True) -> Tuple[DataFrame, T.StructType]:
+        """The TriplesMap's logical source(s), unioned and filtered, and its
+        schema — both memoized, so each schema is read once per compile.
+        ``floor`` applies the scan-parallelism floor (``scan.py``): wanted
+        under a term-map branch, not under a broadcast, whose rows are
+        collected to the driver anyway."""
+        key = (tuple(ls.cache_key() for ls in tm.sources), tm.condition)
+        hit = self._sources.get(key + (floor,))
+        if hit is not None:
+            return hit
+        if not tm.sources:
             raise CompileError(f"TriplesMap {tm.iri} has no logical source")
-        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                    [self._scan(ls, floor) for ls in tm.sources])
         if tm.condition:
-            df = df.filter(F.expr(translate_condition(tm.condition)))
-        return df
+            df = df.filter(translate_condition(tm.condition))
+        if key not in self._schemas:
+            self._schemas[key] = df.schema
+        hit = self._sources[key + (floor,)] = (df, self._schemas[key])
+        return hit
+
+    def _ctx(self, schema: T.StructType, prefix: str = "") -> CompileCtx:
+        return CompileCtx(
+            columns=[prefix + f.name for f in schema.fields],
+            base_iri=self.plan.base_iri,
+            functions=self.functions,
+            column_prefix=prefix,
+            irify=self.irify,
+            dtypes={prefix + f.name: f.dataType.simpleString()
+                    for f in schema.fields},
+            infer_literal_datatypes=self.infer_literal_datatypes,
+        )
 
     def _parent_is_small(self, tm: TriplesMap) -> bool:
         total = 0
@@ -141,259 +209,192 @@ class RMLCompiler:
         return total < self.broadcast_threshold
 
     # -- term helpers ----------------------------------------------------------
-    def _graph_cols(self, ctx: CompileCtx, graph_maps) -> List[Column]:
-        cols = []
+    @staticmethod
+    def _graphs(ctx: CompileCtx, graph_maps) -> List[str]:
+        out = []
         for gm in graph_maps:
             tmm = gm.term_map
             if tmm.kind == "constant" and tmm.constant[0] == "iri" \
                     and tmm.constant[1] == R.RR + "defaultGraph":
-                cols.append(F.lit(None).cast("string"))
+                out.append(NULL_STRING)
             else:
-                cols.append(compile_term(ctx, tmm))
-        return cols
+                out.append(compile_term(ctx, tmm))
+        return out
 
     @staticmethod
-    def _effective_graphs(subject_graphs: List[Column],
-                          pom_graphs: List[Column]) -> List[Column]:
+    def _effective_graphs(subject_graphs: List[str],
+                          pom_graphs: List[str]) -> List[str]:
         graphs = subject_graphs + pom_graphs
-        return graphs if graphs else [F.lit(None).cast("string")]
+        return graphs if graphs else [NULL_STRING]
 
     # -- per-TriplesMap compile --------------------------------------------------
     def compile_triples_map(self, tm: TriplesMap) -> List[DataFrame]:
-        df = self._source_df(tm)
-        ctx = CompileCtx(
-            columns=df.columns,
-            base_iri=self.plan.base_iri,
-            functions=self.functions,
-            irify=self.irify,
-            dtypes=dict(df.dtypes),
-            infer_literal_datatypes=self.infer_literal_datatypes,
-        )
-        branches: List[DataFrame] = []
+        df, schema = self._source(tm)
+        ctx = self._ctx(schema)
+        # function-valued objects first: whether one is multi-valued (an
+        # array, fanned out per element — D2) is read from its type
+        fn_raws = {(pi, oi): function_raw(ctx, otm.function)
+                   for pi, pom in enumerate(tm.poms)
+                   for oi, otm in enumerate(pom.objects)
+                   if otm.kind == "function"}
+        proj = with_raws(ctx, df)
+        multi = set()
+        if fn_raws:
+            types = proj.schema
+            multi = {k for k, name in fn_raws.items()
+                     if isinstance(types[name].dataType, T.ArrayType)}
+        n_typed = len(ctx.raws)
+        branches: List[Branch] = []
         for sm in tm.subject_maps:
-            branches.extend(self._compile_for_subject(tm, df, ctx, sm))
-        return branches
+            branches.extend(
+                self._compile_for_subject(tm, ctx, sm, fn_raws, multi))
+        if len(ctx.raws) > n_typed:  # more function maps in other terms
+            proj = with_raws(ctx, df)
+        return [branch(proj) for branch in branches]
 
-    def _compile_for_subject(
-        self, tm: TriplesMap, df: DataFrame, ctx: CompileCtx, sm: SubjectMap
-    ) -> List[DataFrame]:
-        s_col = compile_term(ctx, sm.term_map)
-        subject_graphs = self._graph_cols(ctx, sm.graph_maps)
-        branches: List[DataFrame] = []
+    def _compile_for_subject(self, tm: TriplesMap, ctx: CompileCtx,
+                             sm: SubjectMap, fn_raws: dict,
+                             multi: set) -> List[Branch]:
+        """Every term's SQL for one subject map; the returned branches
+        build their DataFrames once the raw columns are known."""
+        s = compile_term(ctx, sm.term_map)
+        subject_graphs = self._graphs(ctx, sm.graph_maps)
+        branches: List[Branch] = []
 
         # ---- branch 1: plain POMs + rr:class, one scan, one explode ----
-        plain = self._plain_pairs_df(tm, df, ctx, sm, s_col, subject_graphs)
-        if plain is not None:
-            branches.append(plain)
+        pairs = self._plain_pairs(tm, ctx, sm, subject_graphs, fn_raws, multi)
+        if pairs is not None:
+            branches.append(lambda proj, pairs=pairs: _explode(proj, s, pairs))
 
         # ---- referencing object maps: one join per ROM ----
         for pom in tm.poms:
-            pom_graphs = self._graph_cols(ctx, pom.graph_maps)
-            graphs = self._effective_graphs(subject_graphs, pom_graphs)
+            if not pom.ref_objects:
+                continue
+            graphs = self._effective_graphs(
+                subject_graphs, self._graphs(ctx, pom.graph_maps))
+            preds = [compile_term(ctx, ptm) for ptm in pom.predicates]
             for rom in pom.ref_objects:
+                if rom.joins:
+                    branches.append(
+                        lambda proj, rom=rom, preds=preds, graphs=graphs:
+                        self._ref_object_df(proj, ctx, s, preds, graphs, rom))
+                    continue
+                o = self._same_source_parent_term(tm, ctx, rom)
+                pairs = _pair_array([(_pair(p, o, g), False)
+                                     for p in preds for g in graphs])
                 branches.append(
-                    self._ref_object_df(tm, df, ctx, sm, pom, rom, graphs)
-                )
+                    lambda proj, pairs=pairs: _explode(proj, s, pairs))
         return branches
 
     # .. plain pairs .............................................................
-    def _plain_pairs_df(
+    def _plain_pairs(
         self,
         tm: TriplesMap,
-        df: DataFrame,
         ctx: CompileCtx,
         sm: SubjectMap,
-        s_col: Column,
-        subject_graphs: List[Column],
-    ) -> Optional[DataFrame]:
-        # materialize raw object values first so we can detect array-valued
-        # (multi-valued) objects from the schema — drives explode fan-out (D2)
-        tmp_cols: Dict[int, str] = {}
-        obj_raws: List[Tuple[int, int, object]] = []  # (pom_idx, obj_idx, tm)
-        sel = list(df.columns)
-        proj = df
-        idx = 0
-        for pi, pom in enumerate(tm.poms):
-            for oi, otm in enumerate(pom.objects):
-                if otm.kind in ("function",):
-                    name = f"__raw_{idx}"
-                    idx += 1
-                    proj = proj.withColumn(name, raw_value(ctx, otm))
-                    tmp_cols[(pi, oi)] = name
-        schema = dict(zip(proj.columns, [f.dataType for f in proj.schema.fields]))
-
-        pair_arrays: List[Column] = []
-
-        def pair(p: Column, o: Column, g: Column) -> Column:
-            return F.struct(p.alias("p"), o.alias("o"),
-                            g.cast("string").alias("g"))
+        subject_graphs: List[str],
+        fn_raws: dict,
+        multi: set,
+    ) -> Optional[str]:
+        items: List[Tuple[str, bool]] = []
 
         # rr:class → (rdf:type, class) pairs in the subject graphs (D4)
-        class_graphs = self._effective_graphs(subject_graphs, [])
+        rdf_type = sql_lit(f"<{R.RDF_TYPE}>")
         for cls in sm.classes:
-            for g in class_graphs:
-                pair_arrays.append(F.array(pair(
-                    F.lit(f"<{R.RDF_TYPE}>"), F.lit(f"<{cls}>"), g)))
+            for g in self._effective_graphs(subject_graphs, []):
+                items.append((_pair(rdf_type, sql_lit(f"<{cls}>"), g), False))
 
         for pi, pom in enumerate(tm.poms):
             if not pom.objects:
                 continue
-            pom_graphs = self._graph_cols(ctx, pom.graph_maps)
-            graphs = self._effective_graphs(subject_graphs, pom_graphs)
-            p_cols = [compile_term(ctx, ptm) for ptm in pom.predicates]
+            graphs = self._effective_graphs(
+                subject_graphs, self._graphs(ctx, pom.graph_maps))
+            preds = [compile_term(ctx, ptm) for ptm in pom.predicates]
             for oi, otm in enumerate(pom.objects):
                 key = (pi, oi)
-                if key in tmp_cols:
-                    raw_col = F.col(tmp_cols[key])
-                    is_array = isinstance(schema[tmp_cols[key]], T.ArrayType)
+                if key in multi:
+                    # multi-valued fan-out: one (p,o,g) per element.
+                    # NULL input ⇒ NULL element array — flatten() of an
+                    # array containing a NULL is NULL, which would drop
+                    # EVERY pair for the row (incl. rr:class and other
+                    # POMs); coalesce to empty so only the affected
+                    # object map contributes nothing (the reference
+                    # drops only that triple)
+                    o = render_value(ctx, otm, "__elem")
+                    raw = sql_ident(fn_raws[key])
+                    items.extend(
+                        (f"coalesce(transform({raw}, __elem -> "
+                         f"{_pair(p, o, g)}), CAST(array() AS {_PAIRS_TYPE}))",
+                         True)
+                        for p in preds for g in graphs)
+                    continue
+                if key in fn_raws:
+                    o = render_value(ctx, otm, sql_ident(fn_raws[key]))
                 else:
-                    raw_col = None
-                    is_array = False
-                def _elem_pair_fn(_otm, _p, _g):
-                    return lambda x: pair(_p, render_value(ctx, _otm, x), _g)
-
-                for p_col in p_cols:
-                    for g in graphs:
-                        if is_array:
-                            # multi-valued fan-out: one (p,o,g) per element.
-                            # NULL input ⇒ NULL element array — flatten() of an
-                            # array containing a NULL is NULL, which would drop
-                            # EVERY pair for the row (incl. rr:class and other
-                            # POMs); coalesce to empty so only the affected
-                            # object map contributes nothing (the reference
-                            # drops only that triple)
-                            pair_arrays.append(
-                                F.coalesce(
-                                    F.transform(raw_col,
-                                                _elem_pair_fn(otm, p_col, g)),
-                                    F.array().cast(f"array<{_PAIR_STRUCT}>"),
-                                )
-                            )
-                        elif raw_col is not None:
-                            o_col = render_value(ctx, otm, raw_col)
-                            pair_arrays.append(F.array(pair(p_col, o_col, g)))
-                        else:
-                            o_col = compile_term(ctx, otm)
-                            pair_arrays.append(F.array(pair(p_col, o_col, g)))
-
-        if not pair_arrays:
-            return None
-
-        pairs = F.flatten(F.array(*pair_arrays))
-        out = (
-            proj.select(s_col.alias("s"), F.explode(pairs).alias("pair"))
-            .select(
-                "s",
-                F.col("pair.p").alias("p"),
-                F.col("pair.o").alias("o"),
-                F.col("pair.g").alias("g"),
-            )
-        )
-        return out
+                    o = compile_term(ctx, otm)
+                items.extend((_pair(p, o, g), False)
+                             for p in preds for g in graphs)
+        return _pair_array(items) if items else None
 
     # .. referencing object maps .................................................
-    def _ref_object_df(
-        self,
-        tm: TriplesMap,
-        df: DataFrame,
-        ctx: CompileCtx,
-        sm: SubjectMap,
-        pom: PredicateObjectMap,
-        rom: ReferencingObjectMap,
-        graphs: List[Column],
-    ) -> DataFrame:
+    def _same_source_parent_term(self, tm: TriplesMap, ctx: CompileCtx,
+                                 rom: ReferencingObjectMap) -> str:
+        # join-less ROM (D6): well-defined only when child and parent share
+        # the logical source — apply the parent subject expr to child rows
+        # (reference same-source path at pyrml_core.py:1583-1585)
         parent_tm = self.plan.by_iri(rom.parent_triples_map)
-        parent_sm = parent_tm.subject_maps[0]
-        s_col = compile_term(ctx, sm.term_map)
-        p_cols = [compile_term(ctx, ptm) for ptm in pom.predicates]
-
-        if not rom.joins:
-            # join-less ROM (D6): well-defined only when child and parent share
-            # the logical source — apply the parent subject expr to child rows
-            # (reference same-source path at pyrml_core.py:1583-1585)
-            child_keys = {ls.cache_key() for ls in tm.sources}
-            parent_keys = {ls.cache_key() for ls in parent_tm.sources}
-            if child_keys == parent_keys:
-                o_col = compile_term(ctx, parent_sm.term_map)
-                return self._emit(df, s_col, p_cols, o_col, graphs)
+        child_keys = {ls.cache_key() for ls in tm.sources}
+        parent_keys = {ls.cache_key() for ls in parent_tm.sources}
+        if child_keys != parent_keys:
             raise NotImplementedError(
                 "join-less referencing object map across different sources is "
                 "a positional-concat quirk in the reference "
                 "(pyrml_core.py:1452-1453) — unsupported by design"
             )
+        return compile_term(ctx, parent_tm.subject_maps[0].term_map)
 
-        parent_df = self._source_df(parent_tm)
-        prefix = "__p__"
-        parent_sel = parent_df.select(
-            [F.col("`" + c.replace("`", "``") + "`").alias(prefix + c)
-             for c in parent_df.columns]
-        )
-        parent_ctx = CompileCtx(
-            columns=parent_sel.columns,
-            base_iri=self.plan.base_iri,
-            functions=self.functions,
-            column_prefix=prefix,
-            irify=self.irify,
-            dtypes=dict(parent_sel.dtypes),
-            infer_literal_datatypes=self.infer_literal_datatypes,
-        )
-        o_col = compile_term(parent_ctx, parent_sm.term_map)
-
-        from .terms import source_col
-
-        cond = None
-        for j in rom.joins:
-            left = source_col(ctx, j.child)
-            right = source_col(parent_ctx, j.parent)
-            c = left.eqNullSafe(right) & left.isNotNull()
-            cond = c if cond is None else (cond & c)
-
-        right = parent_sel
+    def _ref_object_df(
+        self,
+        df: DataFrame,
+        ctx: CompileCtx,
+        s: str,
+        preds: List[str],
+        graphs: List[str],
+        rom: ReferencingObjectMap,
+    ) -> DataFrame:
+        parent_tm = self.plan.by_iri(rom.parent_triples_map)
         parent_small = self._parent_is_small(parent_tm)
+        parent_df, parent_schema = self._source(parent_tm,
+                                                floor=not parent_small)
+        prefix = "__p__"
+        parent_ctx = self._ctx(parent_schema, prefix)
+        o = compile_term(parent_ctx, parent_tm.subject_maps[0].term_map)
+        right = with_raws(parent_ctx, parent_df.selectExpr(
+            *[f"{sql_ident(f.name)} AS {sql_ident(prefix + f.name)}"
+              for f in parent_schema.fields]))
+
+        conds = []
+        for j in rom.joins:
+            left_key = source_col(ctx, j.child)
+            conds.append(f"{left_key} <=> {source_col(parent_ctx, j.parent)} "
+                         f"AND {left_key} IS NOT NULL")
         if parent_small:
             right = F.broadcast(right)
         elif self.salt_joins > 1:
             # celebrity-key salting: child rows spread over salt buckets
             # (deterministic hash, resumable), parent replicated per bucket
             salt = self.salt_joins
-            df = df.withColumn(
-                "__salt_l",
-                F.pmod(F.xxhash64(*[F.col("`" + c.replace("`", "``") + "`")
-                                    for c in df.columns]),
-                       F.lit(salt)).cast("int"),
-            )
-            right = right.withColumn(
-                "__salt_r", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-            )
-            cond = cond & (F.col("__salt_l") == F.col("__salt_r"))
-        joined = df.join(right, cond, "inner")
-        return self._emit(joined, s_col, p_cols, o_col, graphs)
-
-    @staticmethod
-    def _emit(
-        df: DataFrame,
-        s_col: Column,
-        p_cols: List[Column],
-        o_col: Column,
-        graphs: List[Column],
-    ) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(p.alias("p"), o_col.alias("o"),
-                         g.cast("string").alias("g"))
-                for p in p_cols
-                for g in graphs
-            ]
-        )
-        return (
-            df.select(s_col.alias("s"), F.explode(pairs).alias("pair"))
-            .select(
-                "s",
-                F.col("pair.p").alias("p"),
-                F.col("pair.o").alias("o"),
-                F.col("pair.g").alias("g"),
-            )
-        )
+            cols = ", ".join(sql_ident(c) for c in ctx.columns)
+            df = df.selectExpr(
+                "*", f"CAST(pmod(xxhash64({cols}), {salt}) AS INT) AS __salt_l")
+            right = right.selectExpr(
+                "*", f"explode(array({', '.join(map(str, range(salt)))})) "
+                "AS __salt_r")
+            conds.append("__salt_l = __salt_r")
+        joined = df.join(right, F.expr(" AND ".join(conds)), "inner")
+        pairs = _pair_array([(_pair(p, o, g), False)
+                             for p in preds for g in graphs])
+        return _explode(joined, s, pairs)
 
     # -- whole plan -------------------------------------------------------------
     def compile(self, deduplicate: bool = True) -> DataFrame:
@@ -405,7 +406,7 @@ class RMLCompiler:
                 [T.StructField(c, T.StringType()) for c in OUTPUT_SCHEMA]
             )
             return self.spark.createDataFrame([], schema)
-        out = reduce(lambda a, b: a.unionByName(b), branches)
+        out = reduce(DataFrame.union, branches)  # all are (s, p, o, g)
         out = out.na.drop(subset=["s", "p", "o"])  # D9
         if deduplicate:
             out = out.dropDuplicates(OUTPUT_SCHEMA)  # D8 set semantics

@@ -6,9 +6,11 @@ IRI→kwarg parameter binding (``@rml_function`` decorator,
 Python function **per row**, ``pyrml_core.py:1261-1271``).
 
 Here every function compiles to a native Spark Column expression (JVM-side,
-whole-stage codegen). Only genuinely Python-bound functions (short_uuid's
-base57 alphabet, slugify's transliteration) fall back to vectorized
-``pandas_udf`` — never row-at-a-time Python.
+whole-stage codegen); the term compiler materializes it as a named raw
+column its SQL text refers to (``terms.with_raws``). Only genuinely
+Python-bound functions (short_uuid's base57 alphabet, slugify's
+transliteration) fall back to vectorized ``pandas_udf`` — never
+row-at-a-time Python.
 
 Reference bugs deliberately NOT replicated (SURVEY.md §7): ``string_substring``
 reversed slice (functions.py:233), ``in_range`` int-only ``range()``
@@ -149,11 +151,12 @@ class FunctionRegistry:
         self._fns[fun_id] = rf
 
     def compile_call(self, ctx, call) -> Column:
-        """FunctionCall IR → Column. Param term maps compile to raw values."""
-        from ..terms import raw_value
+        """FunctionCall IR → Column. Param term maps compile to raw values:
+        ``F.expr`` over their SQL, constants as ``const_lit``."""
+        from ..terms import raw_column
 
         fn = self.get(call.function_iri)
-        args = [(iri, raw_value(ctx, tm)) for iri, tm in call.params]
+        args = [(iri, raw_column(ctx, tm)) for iri, tm in call.params]
         return fn.build(args)
 
 

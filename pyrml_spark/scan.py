@@ -12,12 +12,13 @@ group each.
 ``read_parquet_parallel`` therefore round-robin-repartitions the scan to
 the session's shuffle parallelism, but ONLY when the input is small enough
 that the scan cannot reach that parallelism on its own: the gate estimates
-the split count from the input's byte size against the default 128 MB split
-(``spark.sql.files.maxPartitionBytes``), so any input larger than
-``partitions × 128 MB`` — every production table — skips the repartition
-and keeps its native splits (no extra exchange in the plan).  The target
-derives from ``spark.sql.shuffle.partitions`` — never a hard-coded core
-count — so the same code is right on ``local[4]``, 32 and a cluster.
+the split count from the input's byte size against the session's split
+size (``spark.sql.files.maxPartitionBytes``, 128 MB by default), so any
+input larger than ``partitions × split size`` — every production table —
+skips the repartition and keeps its native splits (no extra exchange in
+the plan).  The target derives from ``spark.sql.shuffle.partitions`` —
+never a hard-coded core count — so the same code is right on
+``local[4]``, 32 and a cluster.
 
 Connect-pure by design (no ``sparkContext``/``rdd``): the byte probe uses
 plain ``os`` on the path and silently skips for non-local URIs (object
@@ -27,10 +28,20 @@ stores), where inputs are production-sized anyway.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SPLIT_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
+_UNIT_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _byte_string(value: str) -> int:
+    """Spark's byte-size syntax (``134217728b``, ``128m``, ``1k``, bare
+    bytes), as ``JavaUtils.byteStringAsBytes`` reads it."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", value.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _UNIT_SHIFT[m.group(2)]
 
 
 def _local_input_bytes(path: str) -> int | None:
@@ -54,6 +65,8 @@ def parallelize_scan(spark: SparkSession, df: DataFrame,
     """Floor an already-built scan's parallelism (see module docstring)."""
     try:
         target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        split_bytes = _byte_string(
+            spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:  # noqa: BLE001 — parallelism floor is best-effort
         return df
     if target <= 1:
@@ -61,7 +74,7 @@ def parallelize_scan(spark: SparkSession, df: DataFrame,
     n_bytes = _local_input_bytes(path)
     if n_bytes is None:
         return df
-    est_splits = max(1, n_bytes // _SPLIT_BYTES)
+    est_splits = max(1, n_bytes // max(1, split_bytes))
     if est_splits < target:
         df = df.repartition(target)
     return df

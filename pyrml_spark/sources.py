@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .model import LogicalSource
-from .scan import parallelize_scan, read_parquet_parallel
 
 
 class SourceError(ValueError):
@@ -885,8 +884,9 @@ def load_xml_source(
 
 class SourceLoader:
     """Loads and memoizes logical sources (reference: one read per source id,
-    pyrml_core.py:875-876; Spark-side we additionally ``persist()`` sources
-    referenced by more than one compiled branch — see compiler)."""
+    pyrml_core.py:875-876). The memoized scan is the plain one; the
+    compiler floors its parallelism (:meth:`scan_path`) only where a
+    term-map branch reads it, never under a broadcast."""
 
     def __init__(self, spark: SparkSession, search_roots: Optional[List[str]] = None):
         self.spark = spark
@@ -901,6 +901,13 @@ class SourceLoader:
         self._cache[key] = df
         return df
 
+    def scan_path(self, ls: LogicalSource) -> Optional[str]:
+        """The local file behind a CSV / parquet scan, whose parallelism
+        ``scan.parallelize_scan`` may floor; None for every other source."""
+        if ls.kind in ("csv", "csvw", "parquet"):
+            return _find_file(ls.source, self.search_roots)
+        return None
+
     def _load(self, ls: LogicalSource) -> DataFrame:
         spark = self.spark
         if ls.kind in ("csv", "csvw"):
@@ -912,9 +919,7 @@ class SourceLoader:
             )
             if ls.encoding:
                 reader = reader.option("encoding", ls.encoding)
-            # benchmark-scale single files scan as ONE partition, starving
-            # the whole term-map pipeline of parallelism (pyrml_spark.scan)
-            return parallelize_scan(spark, reader.csv(path), path)
+            return reader.csv(path)
         if ls.kind == "json":
             path = _find_file(ls.source, self.search_roots)
             return load_json_source(spark, path, ls.iterator)
@@ -923,7 +928,7 @@ class SourceLoader:
             return load_xml_source(spark, path, ls.iterator)
         if ls.kind == "parquet":
             path = _find_file(ls.source, self.search_roots)
-            return read_parquet_parallel(spark, path)
+            return spark.read.parquet(path)
         if ls.kind == "table":
             return spark.read.table(ls.source)
         if ls.kind == "sql":

@@ -115,6 +115,10 @@ class StreamSourceLoader(SourceLoader):
     def is_stream(self, ls: LogicalSource) -> bool:
         return ls.source == self.stream_source
 
+    def scan_path(self, ls: LogicalSource) -> Optional[str]:
+        # the streaming scan keeps its micro-batch partitioning
+        return None if self.is_stream(ls) else super().scan_path(ls)
+
     def _load(self, ls: LogicalSource) -> DataFrame:
         if not self.is_stream(ls):
             return super()._load(ls)

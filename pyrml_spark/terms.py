@@ -1,11 +1,26 @@
-"""Term-map → Spark Column compiler.
+"""Term-map → Spark SQL expression compiler.
 
 The reference evaluates term maps row-at-a-time in Python over numpy arrays
 (``pyrml_api.py:222-228``, ``Expression._eval_`` per row at
-``pyrml_api.py:402-454``).  Here every term map compiles to a native Spark
-Column expression — template concat, URL-encoding, datatype canonicalization
-and N-Triples rendering all stay inside whole-stage codegen; no Python in the
-row path.
+``pyrml_api.py:402-454``).  Here every term map compiles to Spark SQL
+expression **text** — template concat, URL-encoding, datatype
+canonicalization and N-Triples rendering all stay inside whole-stage
+codegen; no Python in the row path.
+
+Why text and not ``F.*`` Column trees: in classic PySpark every Column call
+is 3–8 py4j round trips (call-site capture, active-session lookup, the
+reflective function lookup, the call itself), and a mapping document's term
+trees add up to thousands of nodes. Compiling the 8-map benchmark document
+built Column trees in ≈8,000 round trips; as SQL text the compiler hands
+each TriplesMap branch to ONE ``selectExpr`` and the whole compile takes a
+few hundred. The text is built only through :func:`sql_lit` (string
+constants, parser-setting independent) and :func:`sql_ident` (column
+names), so no mapping value can change the expression's structure.
+
+Function maps stay Column-built (the registry's interface): their arguments
+arrive as ``F.expr(sql)`` (constants as :func:`const_lit`), and the
+resulting Column is materialized once under a ``__raw_i`` column
+(:func:`with_raws`) that the rendering SQL refers to by name.
 
 Semantics mirrored from the reference (file:line cites into /root/reference):
   * template placeholder substitution with ``\\{``/``\\}`` escapes and
@@ -25,9 +40,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Callable, List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import rdfterms as R
@@ -41,6 +56,15 @@ _TMPL_TOKEN = re.compile(r"\\\{|\\\}|\{([^{}]+)\}")
 IRI_VALID_RE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s"<>{}|\\^`]*$'
 LANG_VALID_RE = r"^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$"
 
+_URL_RE = r"(?i)^(https?|ftps?)://\S+$"
+_SCHEME_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
+_DEC_TRAILING_ZEROS_RE = r"(\.\d*?)0+$"
+_DEC_TRAILING_DOT_RE = r"\.$"
+_ISO_SECONDS = "yyyy-MM-dd'T'HH:mm:ss"
+_DQ = "'\"'"
+
+NULL_STRING = "CAST(NULL AS STRING)"
+
 
 @dataclass
 class CompileCtx:
@@ -53,6 +77,36 @@ class CompileCtx:
     irify: bool = False                          # PyRML.IRIFY full slug path
     dtypes: Optional[dict] = None                # column → Spark simple type
     infer_literal_datatypes: bool = False        # PyRML.INFER_LITERAL_DATATYPES
+    # function-map Columns the SQL refers to by name: (name, Column, level);
+    # a raw's level is one above the raws its own arguments refer to
+    raws: List[Tuple[str, Column, int]] = field(default_factory=list)
+
+
+# ---------------------------------------------------------------------------
+# SQL text primitives
+# ---------------------------------------------------------------------------
+
+_QUOTE_OR_BACKSLASH = re.compile(r"(['\\])")
+
+
+def _concat(parts: Sequence[str]) -> str:
+    return parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
+
+
+def sql_lit(value: str) -> str:
+    """A SQL string constant that parses to ``value`` whatever
+    ``spark.sql.parser.escapedStringLiterals`` says: quotes and backslashes
+    (the only characters the two parser modes read differently) never
+    appear inside a quoted literal — they are spliced in as ``chr(39)`` /
+    ``chr(92)``, which constant folding turns back into one literal."""
+    parts = [("chr(39)" if p == "'" else "chr(92)" if p == "\\" else f"'{p}'")
+             for p in _QUOTE_OR_BACKSLASH.split(value) if p]
+    return _concat(parts) if parts else "''"
+
+
+def sql_ident(name: str) -> str:
+    """A backtick-quoted column name (dots and backticks stay literal)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 # ---------------------------------------------------------------------------
@@ -69,10 +123,6 @@ def resolve_column(columns: Sequence[str], name: str) -> Optional[str]:
         return name.upper()
     lowered = {c.lower(): c for c in columns}
     return lowered.get(name.lower())
-
-
-def _col(name: str) -> Column:
-    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def const_lit(value) -> Column:
@@ -95,32 +145,80 @@ def const_value(col: Column):
     return d.get("_pyrml_const") if isinstance(d, dict) else None
 
 
-def source_col(ctx: CompileCtx, name: str) -> Column:
-    """Resolve a logical reference to a source column; missing ⇒ NULL
-    (reproduces RMLTC0002c's expected-empty semantics)."""
+def _resolve(ctx: CompileCtx, name: str) -> Optional[str]:
     resolved = resolve_column(ctx.columns, ctx.column_prefix + name)
     if resolved is None and ctx.column_prefix:
         resolved = resolve_column(ctx.columns, name)
+    return resolved
+
+
+def source_col(ctx: CompileCtx, name: str) -> str:
+    """Resolve a logical reference to a source column; missing ⇒ NULL
+    (reproduces RMLTC0002c's expected-empty semantics)."""
+    resolved = _resolve(ctx, name)
     if resolved is None:
-        return F.lit(None).cast("string")
-    return _col(resolved).cast("string")
+        return NULL_STRING
+    return f"CAST({sql_ident(resolved)} AS STRING)"
+
+
+# ---------------------------------------------------------------------------
+# function maps: Columns materialized under a name the SQL refers to
+# ---------------------------------------------------------------------------
+
+def _materialize(ctx: CompileCtx, col: Column, args_from: int) -> str:
+    """Register ``col`` as a raw column; ``args_from`` is ``len(ctx.raws)``
+    before its arguments were compiled, so every raw registered since is
+    one its arguments refer to."""
+    level = max((lv for _, _, lv in ctx.raws[args_from:]), default=-1) + 1
+    name = f"{ctx.column_prefix}__raw_{len(ctx.raws)}"
+    ctx.raws.append((name, col, level))
+    return name
+
+
+def with_raws(ctx: CompileCtx, df: DataFrame) -> DataFrame:
+    """``df`` plus every raw column registered in ``ctx`` — one
+    ``withColumns`` per dependency level (normally exactly one)."""
+    for level in sorted({lv for _, _, lv in ctx.raws}):
+        df = df.withColumns({n: c for n, c, lv in ctx.raws if lv == level})
+    return df
+
+
+def _call_column(ctx: CompileCtx, call: FunctionCall) -> Column:
+    if ctx.functions is None:
+        raise ValueError("function map used but no FunctionRegistry in ctx")
+    return ctx.functions.compile_call(ctx, call)
+
+
+def function_raw(ctx: CompileCtx, call: FunctionCall) -> str:
+    """Compile a function map through the registry; returns the name of
+    the raw column holding its value."""
+    args_from = len(ctx.raws)
+    return _materialize(ctx, _call_column(ctx, call), args_from)
+
+
+def raw_column(ctx: CompileCtx, tm: TermMap) -> Column:
+    """A term's raw value as a registry argument: constants as
+    :func:`const_lit`, nested function maps as the registry's own Column,
+    everything else as ``F.expr`` over its SQL."""
+    if tm.kind == "constant":
+        return const_lit(tm.constant[1])
+    if tm.kind == "function":
+        return _call_column(ctx, tm.function)
+    return F.expr(raw_value(ctx, tm))
 
 
 # ---------------------------------------------------------------------------
 # URL-encoding (match Python quote(val, safe='') — pyrml_api.py:443)
 # ---------------------------------------------------------------------------
 
-def url_encode(col: Column) -> Column:
+def url_encode(sql: str) -> str:
     """Percent-encode like ``urllib.parse.quote(v, safe='')``.
 
     Spark's ``url_encode`` is form-encoding (Java URLEncoder): space→'+',
     keeps ``*``, encodes ``~``. Fix the three divergences JVM-side.
     """
-    enc = F.url_encode(col)
-    enc = F.replace(enc, F.lit("+"), F.lit("%20"))
-    enc = F.replace(enc, F.lit("*"), F.lit("%2A"))
-    enc = F.replace(enc, F.lit("%7E"), F.lit("~"))
-    return enc
+    return (f"replace(replace(replace(url_encode({sql}), '+', '%20'), "
+            f"'*', '%2A'), '%7E', '~')")
 
 
 # Source-column Spark types whose CAST-to-string renders entirely within
@@ -137,9 +235,7 @@ def _source_dtype(ctx: "CompileCtx", name: str) -> Optional[str]:
     """Spark simple type of a resolved source column (None if unknown)."""
     if not ctx.dtypes:
         return None
-    resolved = resolve_column(ctx.columns, ctx.column_prefix + name)
-    if resolved is None and ctx.column_prefix:
-        resolved = resolve_column(ctx.columns, name)
+    resolved = _resolve(ctx, name)
     if resolved is None:
         return None
     return (ctx.dtypes.get(resolved) or "").lower()
@@ -151,10 +247,9 @@ def _encoding_is_identity(ctx: "CompileCtx", name: str) -> bool:
                                or dt.startswith("decimal"))
 
 
-def escape_angle(col: Column) -> Column:
+def escape_angle(sql: str) -> str:
     """Always-on part of TermUtils.irify (pyrml_api.py:535-537)."""
-    return F.replace(F.replace(col, F.lit("<"), F.lit("%3C")),
-                     F.lit(">"), F.lit("%3E"))
+    return f"replace(replace({sql}, '<', '%3C'), '>', '%3E')"
 
 
 # transliteration standing in for unidecode (not installed): Latin-1 +
@@ -461,76 +556,65 @@ _SCRIPT_MAP.update(_derive_brahmic(0x0D00, {   # Malayalam
 _CJK_GUARD = "[ぁ-ゖァ-ヺ一-鿿가-힣֐-״฀-๛ऀ-ॿঀ-৿஀-෿Ⴀ-ჿԱ-֏]"
 
 
-def cjk_translit(col: Column) -> Column:
+def _sql_array(values: Sequence[str]) -> str:
+    return f"array({', '.join(sql_lit(v) for v in values)})"
+
+
+def cjk_translit(sql: str) -> str:
     """Per-character CJK + Hebrew/Thai/Devanagari romanization, all
     JVM-side: split → transform → array_join, evaluated only for strings
     the rlike guard says contain one of those scripts. Kana/hanzi and the
     r6 scripts by table lookup, Hangul by arithmetic decomposition."""
-    hira = F.array(*[F.lit(x) for x in _HIRAGANA])
-    kata = F.array(*[F.lit(x) for x in _KATAKANA])
-    ini = F.array(*[F.lit(x) for x in _HANGUL_INI])
-    med = F.array(*[F.lit(x) for x in _HANGUL_MED])
-    fin = F.array(*[F.lit(x) for x in _HANGUL_FIN])
-    hmap = F.create_map(*[F.lit(x)
-                          for kv in {**_HANZI_PINYIN, **_SCRIPT_MAP}.items()
-                          for x in kv])
-
-    def tr(c: Column) -> Column:
-        code = F.ascii(c)
-        hidx = code - F.lit(0xAC00)
-        return (
-            F.when((code >= 0x3041) & (code <= 0x3096),
-                   F.element_at(hira, code - F.lit(0x3041 - 1)))
-            .when((code >= 0x30A1) & (code <= 0x30FA),
-                  F.element_at(kata, code - F.lit(0x30A1 - 1)))
-            .when((code >= 0xAC00) & (code <= 0xD7A3),
-                  F.concat(
-                      F.element_at(
-                          ini, F.floor(hidx / 588).cast("int") + F.lit(1)),
-                      F.element_at(
-                          med,
-                          F.floor((hidx % 588) / 28).cast("int") + F.lit(1)),
-                      F.element_at(fin, (hidx % 28) + F.lit(1))))
-            .otherwise(F.coalesce(F.element_at(hmap, c), c))
-        )
-
-    return F.when(
-        col.rlike(_CJK_GUARD),
-        F.array_join(F.transform(F.split(col, ""), tr), ""),
-    ).otherwise(col)
+    hmap = "map(" + ", ".join(
+        f"{sql_lit(k)}, {sql_lit(v)}"
+        for k, v in {**_HANZI_PINYIN, **_SCRIPT_MAP}.items()) + ")"
+    code = "ascii(__ch)"
+    hidx = f"({code} - {0xAC00})"
+    tr = (
+        f"CASE WHEN {code} >= {0x3041} AND {code} <= {0x3096} "
+        f"THEN element_at({_sql_array(_HIRAGANA)}, {code} - {0x3041 - 1}) "
+        f"WHEN {code} >= {0x30A1} AND {code} <= {0x30FA} "
+        f"THEN element_at({_sql_array(_KATAKANA)}, {code} - {0x30A1 - 1}) "
+        f"WHEN {code} >= {0xAC00} AND {code} <= {0xD7A3} THEN concat("
+        f"element_at({_sql_array(_HANGUL_INI)}, "
+        f"CAST(floor({hidx} / 588) AS INT) + 1), "
+        f"element_at({_sql_array(_HANGUL_MED)}, "
+        f"CAST(floor(({hidx} % 588) / 28) AS INT) + 1), "
+        f"element_at({_sql_array(_HANGUL_FIN)}, ({hidx} % 28) + 1)) "
+        f"ELSE coalesce(element_at({hmap}, __ch), __ch) END"
+    )
+    return (f"CASE WHEN {sql} RLIKE {sql_lit(_CJK_GUARD)} "
+            f"THEN array_join(transform(split({sql}, ''), __ch -> {tr}), '') "
+            f"ELSE {sql} END")
 
 
-def irify_full(col: Column) -> Column:
+def irify_full(sql: str) -> str:
     """The PyRML.IRIFY=True slugification path (pyrml_api.py:500-538):
     transliterate → lower → strip ' ; , & " ? ! ( ) → space|/ → _ →
     collapse -/_/| runs → %3C/%3E. Applied only to strings that are not
     already http(s)/ftp URLs (the reference's URL regex guard)."""
-    url_guard = col.rlike(r"(?i)^(https?|ftps?)://\S+$")
-    s = F.translate(cjk_translit(col), _TRANSLIT_SRC, _TRANSLIT_DST)
+    url_guard = f"{sql} RLIKE {sql_lit(_URL_RE)}"
+    s = (f"translate({cjk_translit(sql)}, {sql_lit(_TRANSLIT_SRC)}, "
+         f"{sql_lit(_TRANSLIT_DST)})")
     for frm, to in _TRANSLIT_MULTI:
-        s = F.replace(s, F.lit(frm), F.lit(to))
-    s = F.lower(s)
-    s = F.regexp_replace(s, r"[';,&\"?!]", "")
-    s = F.regexp_replace(s, r"[ /]", "_")
-    s = F.regexp_replace(s, r"[()]", "")
-    s = F.regexp_replace(s, r"-$", "")
-    s = F.regexp_replace(s, r"(-)+", "_")
-    s = F.regexp_replace(s, r"(_)+", "_")
-    s = F.regexp_replace(s, r"(\|)+", "_")
-    return escape_angle(F.when(url_guard, col).otherwise(s))
+        s = f"replace({s}, {sql_lit(frm)}, {sql_lit(to)})"
+    s = f"lower({s})"
+    for pattern, repl in ((r"[';,&\"?!]", ""), (r"[ /]", "_"), (r"[()]", ""),
+                          (r"-$", ""), (r"(-)+", "_"), (r"(_)+", "_"),
+                          (r"(\|)+", "_")):
+        s = f"regexp_replace({s}, {sql_lit(pattern)}, {sql_lit(repl)})"
+    return escape_angle(f"CASE WHEN {url_guard} THEN {sql} ELSE {s} END")
 
 
 # ---------------------------------------------------------------------------
-# N-Triples literal escaping as Column expressions
+# N-Triples literal escaping
 # ---------------------------------------------------------------------------
 
-def nt_escape(col: Column) -> Column:
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    out = F.replace(out, F.lit("\t"), F.lit("\\t"))
-    return out
+def nt_escape(sql: str) -> str:
+    for ch, esc in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                    ("\r", "\\r"), ("\t", "\\t")):
+        sql = f"replace({sql}, {sql_lit(ch)}, {sql_lit(esc)})"
+    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -544,41 +628,41 @@ _INT_TYPES = {
 }
 
 
-def canonicalize_datatype(col: Column, datatype: str) -> Column:
+def _when_cast(cast: str, canon: str, sql: str) -> str:
+    return f"CASE WHEN {cast} IS NOT NULL THEN {canon} ELSE {sql} END"
+
+
+def canonicalize_datatype(sql: str, datatype: str) -> str:
     """Canonical XSD lexical form; uncastable values keep their lexical form."""
     local = datatype.rsplit("#", 1)[-1]
     if local in _INT_TYPES:
-        cast = col.try_cast("long")
-        return F.when(cast.isNotNull(), cast.cast("string")).otherwise(col)
+        cast = f"try_cast({sql} AS BIGINT)"
+        return _when_cast(cast, f"CAST({cast} AS STRING)", sql)
     if local == "decimal":
-        cast = col.try_cast("decimal(38,12)")
-        canon = F.regexp_replace(cast.cast("string"), r"(\.\d*?)0+$", r"$1")
-        canon = F.regexp_replace(canon, r"\.$", "")
-        return F.when(cast.isNotNull(), canon).otherwise(col)
+        cast = f"try_cast({sql} AS DECIMAL(38,12))"
+        canon = (f"regexp_replace(CAST({cast} AS STRING), "
+                 f"{sql_lit(_DEC_TRAILING_ZEROS_RE)}, '$1')")
+        canon = f"regexp_replace({canon}, {sql_lit(_DEC_TRAILING_DOT_RE)}, '')"
+        return _when_cast(cast, canon, sql)
     if local in ("double", "float"):
-        cast = col.try_cast("double")
-        return F.when(cast.isNotNull(), cast.cast("string")).otherwise(col)
+        cast = f"try_cast({sql} AS DOUBLE)"
+        return _when_cast(cast, f"CAST({cast} AS STRING)", sql)
     if local == "boolean":
-        lowered = F.lower(col)
-        return (
-            F.when(lowered.isin("true", "1"), F.lit("true"))
-            .when(lowered.isin("false", "0"), F.lit("false"))
-            .otherwise(col)
-        )
+        return (f"CASE WHEN lower({sql}) IN ('true', '1') THEN 'true' "
+                f"WHEN lower({sql}) IN ('false', '0') THEN 'false' "
+                f"ELSE {sql} END")
     if local == "date":
-        cast = col.try_cast("date")
-        return F.when(cast.isNotNull(), cast.cast("string")).otherwise(col)
+        cast = f"try_cast({sql} AS DATE)"
+        return _when_cast(cast, f"CAST({cast} AS STRING)", sql)
     if local == "dateTime":
-        cast = F.try_to_timestamp(col)
-        frac = F.date_format(cast, "SSSSSS")
-        iso = F.concat(
-            F.date_format(cast, "yyyy-MM-dd'T'HH:mm:ss"),
-            F.when(frac == "000000", F.lit("")).otherwise(
-                F.regexp_replace(F.concat(F.lit("."), frac), r"0+$", "")
-            ),
-        )
-        return F.when(cast.isNotNull(), iso).otherwise(col)
-    return col
+        cast = f"try_to_timestamp({sql})"
+        frac = f"date_format({cast}, 'SSSSSS')"
+        iso = (f"concat(date_format({cast}, "
+               f"{sql_lit(_ISO_SECONDS)}), "
+               f"CASE WHEN {frac} = '000000' THEN '' "
+               f"ELSE regexp_replace(concat('.', {frac}), '0+$', '') END)")
+        return _when_cast(cast, iso, sql)
+    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -586,17 +670,17 @@ def canonicalize_datatype(col: Column, datatype: str) -> Column:
 # ---------------------------------------------------------------------------
 
 def _plain_template_parts(ctx: CompileCtx, text: str,
-                          iri_mode: bool) -> List[Column]:
-    parts: List[Column] = []
+                          iri_mode: bool) -> List[str]:
+    parts: List[str] = []
     pos = 0
     for m in _TMPL_TOKEN.finditer(text):
         if m.start() > pos:
-            parts.append(F.lit(text[pos:m.start()]))
+            parts.append(sql_lit(text[pos:m.start()]))
         tok = m.group(0)
         if tok == "\\{":
-            parts.append(F.lit("{"))
+            parts.append("'{'")
         elif tok == "\\}":
-            parts.append(F.lit("}"))
+            parts.append("'}'")
         else:
             name = m.group(1).strip()
             val = source_col(ctx, name)
@@ -608,13 +692,14 @@ def _plain_template_parts(ctx: CompileCtx, text: str,
             parts.append(val)
         pos = m.end()
     if pos < len(text):
-        parts.append(F.lit(text[pos:]))
+        parts.append(sql_lit(text[pos:]))
     return parts
 
 
 def compile_eval_ast(ctx: CompileCtx, ast) -> Column:
-    """%eval:% AST → Column (T14). Functions resolved from the registry by
-    registered id or IRI local name; '*' passes the whole row struct."""
+    """%eval:% AST → Column argument (T14). Functions resolved from the
+    registry by registered id or IRI local name; '*' passes the whole row
+    struct."""
     kind = ast[0]
     if kind == "call":
         if ctx.functions is None:
@@ -625,59 +710,60 @@ def compile_eval_ast(ctx: CompileCtx, ast) -> Column:
     if kind == "str":
         s = ast[1]
         if "{" in s:
-            parts = _plain_template_parts(ctx, s, iri_mode=False)
-            return parts[0] if len(parts) == 1 else F.concat(*parts)
+            return F.expr(_concat(_plain_template_parts(ctx, s,
+                                                        iri_mode=False)))
         return const_lit(s)
     if kind in ("num", "const"):
         return const_lit(ast[1])
     if kind == "row":
-        return F.struct(*[_col(c).alias(c) for c in ctx.columns])
+        return F.expr("named_struct(" + ", ".join(
+            f"{sql_lit(c)}, {sql_ident(c)}" for c in ctx.columns) + ")")
     raise ValueError(f"unknown eval AST node {ast!r}")
 
 
-def compile_template_raw(ctx: CompileCtx, template: str, iri_mode: bool) -> Column:
+def compile_template_raw(ctx: CompileCtx, template: str, iri_mode: bool) -> str:
     """Template → concat expression. IRI mode %-encodes each placeholder.
     A NULL placeholder nulls the whole term (concat null-propagation ==
     the reference's NaN rule at pyrml_api.py:432-434). ``%eval:fun(...)%``
-    segments splice in registry-compiled function calls (T14); like the
-    reference, eval results are inserted verbatim (irify-only, no
-    %-encoding — Funz.eval at pyrml_api.py:119-130)."""
+    segments splice in registry-compiled function calls (T14), materialized
+    as raw columns (:func:`with_raws`); like the reference, eval results
+    are inserted verbatim (irify-only, no %-encoding — Funz.eval at
+    pyrml_api.py:119-130)."""
     from .template_expr import EVAL_RE, parse_eval
 
-    parts: List[Column] = []
+    parts: List[str] = []
     cursor = 0
     for m in EVAL_RE.finditer(template):
         if m.start() > cursor:
             parts.extend(
                 _plain_template_parts(ctx, template[cursor:m.start()], iri_mode)
             )
-        parts.append(compile_eval_ast(ctx, parse_eval(m.group(1))))
+        args_from = len(ctx.raws)
+        name = _materialize(ctx, compile_eval_ast(ctx, parse_eval(m.group(1))),
+                            args_from)
+        parts.append(f"CAST({sql_ident(name)} AS STRING)")
         cursor = m.end()
     if cursor < len(template):
         parts.extend(_plain_template_parts(ctx, template[cursor:], iri_mode))
     if not parts:
-        return F.lit("")
-    return F.concat(*[p.cast("string") for p in parts]) if len(parts) > 1 \
-        else parts[0].cast("string")
+        return "''"
+    return _concat(parts)
 
 
-def raw_value(ctx: CompileCtx, tm: TermMap) -> Column:
+def raw_value(ctx: CompileCtx, tm: TermMap) -> str:
     """The term's raw string value (pre-N-Triples rendering).
 
-    For function maps this may be an ArrayType column (multi-valued objects,
-    e.g. grel:string_split — fan-out handled by the compiler via explode)."""
+    For function maps this names a raw column that may be an ArrayType
+    (multi-valued objects, e.g. grel:string_split — fan-out handled by the
+    compiler via explode)."""
     if tm.kind == "template":
         return compile_template_raw(ctx, tm.template, iri_mode=(tm.term_type == "iri"))
     if tm.kind == "reference":
         return source_col(ctx, tm.reference)
     if tm.kind == "constant":
-        # literal and IRI/bnode constants alike: the bare value, with the
-        # Python constant attached for builders that need a non-Column arg
-        return const_lit(tm.constant[1])
+        return sql_lit(tm.constant[1])
     if tm.kind == "function":
-        if ctx.functions is None:
-            raise ValueError("function map used but no FunctionRegistry in ctx")
-        return ctx.functions.compile_call(ctx, tm.function)
+        return sql_ident(function_raw(ctx, tm.function))
     raise ValueError(f"unknown term map kind {tm.kind!r}")
 
 
@@ -738,34 +824,28 @@ def _template_is_safe_absolute_iri(ctx: CompileCtx, tm: "TermMap") -> bool:
     return re.fullmatch(IRI_VALID_RE.strip("^$"), "".join(skeleton)) is not None
 
 
-def render_value(ctx: CompileCtx, tm: TermMap, raw: Column) -> Column:
-    """Raw value column → N-Triples lexical form column (NULL-preserving)."""
+def render_value(ctx: CompileCtx, tm: TermMap, raw: str) -> str:
+    """Raw value SQL → N-Triples lexical form SQL (NULL-preserving: every
+    branch concatenates ``raw``, and concat of a NULL is NULL)."""
     if tm.kind == "constant":
         # constants render driver-side, exactly once
-        return F.lit(R.to_nt(tm.constant)) if raw is not None else F.lit(None)
+        return sql_lit(R.to_nt(tm.constant))
 
     if tm.term_type == "iri":
         if not ctx.irify and _template_is_safe_absolute_iri(ctx, tm):
-            return F.when(raw.isNull(), F.lit(None)).otherwise(
-                F.concat(F.lit("<"), raw, F.lit(">"))
-            )
+            return f"concat('<', {raw}, '>')"
         val = irify_full(raw) if ctx.irify else escape_angle(raw)
         if ctx.base_iri:
             # relative IRI → base + iri (pyrml_mapper.py:164-194)
-            val = F.when(
-                val.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:"), val
-            ).otherwise(F.concat(F.lit(ctx.base_iri), val))
+            val = (f"CASE WHEN {val} RLIKE "
+                   f"{sql_lit(_SCHEME_RE)} THEN {val} "
+                   f"ELSE concat({sql_lit(ctx.base_iri)}, {val}) END")
         # validity filter: invalid IRIs become NULL (dropped by D9)
-        val = F.when(val.rlike(IRI_VALID_RE), val)
-        return F.when(raw.isNull(), F.lit(None)).otherwise(
-            F.concat(F.lit("<"), val, F.lit(">"))
-        )
+        val = f"CASE WHEN {val} RLIKE {sql_lit(IRI_VALID_RE)} THEN {val} END"
+        return f"concat('<', {val}, '>')"
 
     if tm.term_type == "bnode":
-        label = F.regexp_replace(raw, r"[^A-Za-z0-9]", "_")
-        return F.when(raw.isNull(), F.lit(None)).otherwise(
-            F.concat(F.lit("_:"), label)
-        )
+        return f"concat('_:', regexp_replace({raw}, '[^A-Za-z0-9]', '_'))"
 
     # literal
     datatype = tm.datatype
@@ -782,24 +862,18 @@ def render_value(ctx: CompileCtx, tm: TermMap, raw: Column) -> Column:
     lex = raw
     if datatype:
         lex = canonicalize_datatype(lex, datatype)
-    quoted = F.concat(F.lit('"'), nt_escape(lex), F.lit('"'))
+    quoted = f"concat({_DQ}, {nt_escape(lex)}, {_DQ})"
     if tm.language:
-        out = F.concat(quoted, F.lit("@" + tm.language))
-    elif tm.language_map is not None:
+        return f"concat({quoted}, {sql_lit('@' + tm.language)})"
+    if tm.language_map is not None:
         lang = raw_value(ctx, tm.language_map)
-        lang_ok = lang.isNotNull() & lang.rlike(LANG_VALID_RE)
-        out = F.when(lang_ok, F.concat(quoted, F.lit("@"), lang))
-    elif datatype and datatype != XSD + "string":
-        out = F.concat(quoted, F.lit("^^<" + datatype + ">"))
-    else:
-        out = quoted
-    return F.when(raw.isNull(), F.lit(None)).otherwise(out)
+        return (f"CASE WHEN {lang} IS NOT NULL AND {lang} RLIKE "
+                f"{sql_lit(LANG_VALID_RE)} THEN concat({quoted}, '@', {lang}) END")
+    if datatype and datatype != XSD + "string":
+        return f"concat({quoted}, {sql_lit('^^<' + datatype + '>')})"
+    return quoted
 
 
-def compile_term(ctx: CompileCtx, tm: TermMap) -> Column:
-    """TermMap → rendered N-Triples string Column (or array column for
-    multi-valued function results — caller explodes)."""
-    raw = raw_value(ctx, tm)
-    if tm.kind == "constant":
-        return F.lit(R.to_nt(tm.constant))
-    return render_value(ctx, tm, raw)
+def compile_term(ctx: CompileCtx, tm: TermMap) -> str:
+    """TermMap → rendered N-Triples string SQL."""
+    return render_value(ctx, tm, raw_value(ctx, tm))

@@ -2,7 +2,7 @@
 ``urllib.parse.quote(v, safe='')`` exactly — the reference %-encodes every
 template placeholder that way (pyrml_api.py:443), so any divergence changes
 emitted subject IRIs. `terms.url_encode` builds on Spark's form-encoding
-``F.url_encode`` and patches its three known divergences (space→'+',
+``url_encode`` SQL function and patches its three known divergences (space→'+',
 kept '*', encoded '~'); this fuzz pins that the patch list is complete
 across arbitrary unicode."""
 
@@ -29,6 +29,6 @@ _texts = st.lists(
 def test_url_encode_matches_python_quote(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], ["v"])
     got = [r["e"] for r in
-           df.select(url_encode(F.col("v")).alias("e")).collect()]
+           df.select(F.expr(url_encode("v")).alias("e")).collect()]
     exp = [urllib.parse.quote(v, safe="") for v in vals]
     assert got == exp

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrml_spark.template_expr import EvalParseError, parse_eval
 from pyrml_spark.functions.registry import default_registry
-from pyrml_spark.terms import CompileCtx, compile_template_raw
+from pyrml_spark.terms import CompileCtx, compile_template_raw, with_raws
 
 
 def test_parse_eval_ast():
@@ -34,11 +34,10 @@ def df(spark):
 
 def _eval_template(df, template, iri_mode=False):
     ctx = CompileCtx(columns=df.columns, functions=default_registry())
+    sql = compile_template_raw(ctx, template, iri_mode)
     return [
         r["v"]
-        for r in df.select(
-            compile_template_raw(ctx, template, iri_mode).alias("v")
-        ).collect()
+        for r in with_raws(ctx, df).select(F.expr(sql).alias("v")).collect()
     ]
 
 
@@ -57,12 +56,10 @@ def test_eval_with_custom_registered_python_function(spark, df):
     reg = default_registry()
     reg.register_python("my_reverse", lambda s: s[::-1])
     ctx = CompileCtx(columns=df.columns, functions=reg)
+    sql = compile_template_raw(ctx, "x-%eval:my_reverse('{WORD}')%", False)
     got = [
         r["v"]
-        for r in df.select(
-            compile_template_raw(ctx, "x-%eval:my_reverse('{WORD}')%", False)
-            .alias("v")
-        ).collect()
+        for r in with_raws(ctx, df).select(F.expr(sql).alias("v")).collect()
     ]
     assert got == ["x-OLLEH", "x-DlRoW"]
 

@@ -7,7 +7,7 @@ from pyrml_spark.terms import irify_full
 
 def vals(spark, col, rows):
     df = spark.createDataFrame([(r,) for r in rows], ["v"])
-    return [r["o"] for r in df.select(irify_full(F.col("v")).alias("o")).collect()]
+    return [r["o"] for r in df.select(F.expr(irify_full("v")).alias("o")).collect()]
 
 
 def test_irify_slugs(spark):
@@ -33,7 +33,7 @@ def test_irify_latin_extended_and_multichar(spark):
         [("Łukasz Šťastný",), ("Cæsar Œuvre",), ("straße øst",), ("Đorđe ĳs",)],
         ["v"],
     )
-    got = [r["o"] for r in df.select(irify_full(F.col("v")).alias("o")).collect()]
+    got = [r["o"] for r in df.select(F.expr(irify_full("v")).alias("o")).collect()]
     assert got == ["lukasz_stastny", "caesar_oeuvre", "strasse_ost",
                    "dorde_ijs"], got
 
