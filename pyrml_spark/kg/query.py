@@ -31,8 +31,23 @@ Compilation is the classic relational translation of a SPARQL BGP:
   variable names. A filter whose variables all come from one pattern is
   pushed into every such pattern's scan (prunes before the first join —
   and reaches the parquet reader as a pushed predicate where the
-  expression allows); multi-pattern filters apply at the earliest join
-  that binds all their variables.
+  expression allows); multi-pattern filters apply after the joins that
+  bind all their variables (Catalyst moves them to the earliest one).
+* **One SQL statement per BGP.** ``compile_bgp`` stays pure; its plan is
+  rendered as SQL text — one subquery per pattern over the placeholder
+  ``{t}``, joined left-deep in plan order ``USING`` the join variables,
+  post filters in the outer ``WHERE`` — and run by a single
+  ``spark.sql(text, t=triples)``. Building the same plan from chained
+  ``filter``/``select``/``join`` calls cost one py4j round trip (or
+  several) per call: ≈370–580 round trips for a 4-pattern BGP, and
+  lowering a 4-pattern SPARQL query took ≈120–200 ms of driver time
+  before any job ran (4-CPU host, 25k-triple table). The statement
+  builds with 7–11 round trips, the same query lowers in ≈45 ms, and
+  Catalyst turns it into the same physical plan. Constants are spliced
+  through ``terms.sql_lit`` and names through ``terms.sql_ident``;
+  ``spark.sql`` formats its text with ``str.format``, so every spliced
+  constant and filter has its braces escaped and ``{t}`` is the only
+  field left in the statement.
 
 The reference engine has no query surface at all (it only writes graphs
 — rdflib ``Dataset.serialize``, pyrml_mapper.py:137-140); this module is
@@ -47,6 +62,8 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..terms import sql_ident, sql_lit
 
 _POSITIONS = ("s", "p", "o", "g")  # a pattern uses the first 3 or all 4
 _VAR_RE = re.compile(r"^\?[A-Za-z_][A-Za-z0-9_]*$")
@@ -269,26 +286,57 @@ def compile_bgp(
                    post_filters=post_filters, out_vars=out_vars)
 
 
-def _scan(triples: DataFrame, pl: PatternPlan) -> DataFrame:
-    """One pattern's predicate-pruned, variable-projected scan."""
-    df = triples
-    for pos, t in zip(_POSITIONS, pl.pattern):
-        if not is_var(t):
-            df = df.filter(F.col(pos) == F.lit(t))
-    # same variable in two positions of one pattern (?x :p ?x): the
-    # second occurrence is an intra-row equality, filtered pre-projection
+def _fmt(sql: str) -> str:
+    """Text spliced into the statement, with ``str.format``'s braces
+    escaped: ``spark.sql(text, t=...)`` formats the whole statement, and
+    only the structural ``{t}`` placeholder may survive as a field."""
+    return sql.replace("{", "{{").replace("}", "}}")
+
+
+def _where(conds: Sequence[str]) -> str:
+    # each condition on its own line, so a trailing ``--`` comment in a
+    # caller's filter cannot swallow the text after it
+    return (" WHERE " + " AND ".join(f"({c}\n)" for c in conds)
+            if conds else "")
+
+
+def _pattern_sql(pl: PatternPlan) -> str:
+    """One pattern's predicate-pruned, variable-projected scan as a
+    subquery over ``{t}``: equalities on its constant positions (and on a
+    variable repeated within the pattern, ``?x :p ?x``), then its pushed
+    scan filters over the projected variable names."""
+    conds: List[str] = []
     seen: Dict[str, str] = {}
     for pos, t in zip(_POSITIONS, pl.pattern):
-        if is_var(t):
-            v = _var_name(t)
-            if v in seen:
-                df = df.filter(F.col(pos) == F.col(seen[v]))
-            else:
-                seen[v] = pos
-    df = df.select(*[F.col(pos).alias(v) for v, pos in pl.proj.items()])
-    for f_expr in pl.scan_filters:
-        df = df.filter(F.expr(f_expr))
-    return df
+        if not is_var(t):
+            conds.append(f"{sql_ident(pos)} = {_fmt(sql_lit(t))}")
+            continue
+        v = _var_name(t)
+        if v in seen:
+            conds.append(f"{sql_ident(pos)} = {sql_ident(seen[v])}")
+        else:
+            seen[v] = pos
+    cols = ", ".join(f"{sql_ident(pos)} AS {sql_ident(v)}"
+                     for v, pos in pl.proj.items())
+    sql = f"SELECT {cols} FROM {{t}}{_where(conds)}"
+    if pl.scan_filters:
+        sql = (f"SELECT * FROM ({sql}) AS f"
+               f"{_where([_fmt(f) for f in pl.scan_filters])}")
+    return sql
+
+
+def _bgp_sql(plan: BGPPlan, distinct: bool = True) -> str:
+    """The compiled plan as ONE ``spark.sql`` statement over the
+    placeholder ``{t}``: pattern subqueries joined left-deep in plan
+    order ``USING`` their join variables, post filters in the outer
+    ``WHERE``."""
+    body = f"({_pattern_sql(plan.order[0])}) AS q0"
+    for j, pl in enumerate(plan.order[1:], start=1):
+        using = ", ".join(sql_ident(v) for v in plan.join_vars[j - 1])
+        body += f"\nJOIN ({_pattern_sql(pl)}) AS q{j} USING ({using})"
+    out = ", ".join(sql_ident(v) for v in plan.out_vars)
+    return (f"SELECT {'DISTINCT ' if distinct else ''}{out}\nFROM {body}"
+            f"{_where([_fmt(f) for _, f in plan.post_filters])}")
 
 
 def kg_query(
@@ -316,12 +364,4 @@ def kg_query(
     if stats == "auto":
         stats = predicate_stats(triples)
     plan = compile_bgp(patterns, filters=filters, stats=stats, select=select)
-    acc = _scan(triples, plan.order[0])
-    pending = list(plan.post_filters)
-    for j, pl in enumerate(plan.order[1:]):
-        acc = acc.join(_scan(triples, pl), on=plan.join_vars[j])
-        for step, f_expr in [pf for pf in pending if pf[0] == j]:
-            acc = acc.filter(F.expr(f_expr))
-            pending.remove((step, f_expr))
-    out = acc.select(*plan.out_vars)
-    return out.distinct() if distinct else out
+    return triples.sparkSession.sql(_bgp_sql(plan, distinct), t=triples)

@@ -5,9 +5,14 @@ construct → materialize → **query** story of the north rule.
 The reference engine has no query language at all (it only serializes
 graphs — rdflib ``Dataset.serialize``, pyrml_mapper.py:137-140); this is
 new, Spark-first design: the parser lowers a documented SPARQL subset
-onto :func:`pyrml_spark.kg.query.kg_query`, so execution inherits the
-compiler's predicate-pruned scans, selectivity-ordered shared-variable
-equi-joins, and scan-level FILTER pushdown — nothing here touches a row.
+onto :func:`pyrml_spark.kg.query.kg_query`, so every BGP — the required
+group, each UNION side, OPTIONAL, EXISTS/MINUS and BIND-pattern groups —
+runs as one SQL statement with the compiler's predicate-pruned scans,
+selectivity-ordered shared-variable equi-joins and scan-level FILTER
+pushdown; nothing here touches a row. FILTER/BIND lowering emits SQL
+text whose constants go through ``terms.sql_lit`` (the same text under
+either ``spark.sql.parser.escapedStringLiterals`` setting) and whose
+column names go through ``terms.sql_ident``.
 
 Supported subset (everything else raises :class:`SPARQLUnsupportedError`
 at parse time — loud, never a silent approximation):
@@ -157,10 +162,12 @@ is valid SPARQL — any n rows satisfy it) but the choice of rows is then
 plan-dependent, same as any engine.
 
 Scale notes: the heavy lifting is all in ``kg_query`` (see its module
-docstring for the 100 TB story). ``ORDER BY`` adds one total sort of the
-final projection — a range-partitioned exchange on already-distinct
-output, the standard top-k shape when combined with LIMIT (Spark rewrites
-sort+limit to TakeOrderedAndProject, no full sort materialized).
+docstring for the 100 TB story, and for why each BGP is one SQL
+statement: per-query driver time, not data, dominates a served query).
+``ORDER BY`` adds one total sort of the final projection — a
+range-partitioned exchange on already-distinct output, the standard
+top-k shape when combined with LIMIT (Spark rewrites sort+limit to
+TakeOrderedAndProject, no full sort materialized).
 """
 
 from __future__ import annotations
@@ -173,6 +180,7 @@ from urllib.parse import urljoin
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..terms import sql_ident, sql_lit
 from .query import BGPError, is_var, kg_query
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -817,7 +825,7 @@ class _Parser:
             key = (name, var, agg_distinct)
             for agg in self._having_aggs:
                 if (agg.fn, agg.var, agg.distinct) == key:
-                    return _col(agg.alias)
+                    return sql_ident(agg.alias)
             # `_h<n>` is a valid SPARQL variable name: skip over any the
             # query itself binds, or the aggregated frame would carry two
             # columns of that name (ambiguous-reference at execution —
@@ -830,7 +838,7 @@ class _Parser:
             agg = Aggregate(fn=name, var=var, distinct=agg_distinct,
                             alias=f"_h{n}")
             self._having_aggs.append(agg)
-            return _col(agg.alias)
+            return sql_ident(agg.alias)
         self._reject_unsupported(t)
         raise SPARQLUnsupportedError(
             f"HAVING operand {t.text!r} at offset {t.pos} is outside "
@@ -1556,9 +1564,9 @@ class _Parser:
             return [(obj, path.inner.iri, subj)]
         if isinstance(path, PathNeg):
             pv = self._fresh_var()
-            in_list = ", ".join(_sql_str(i) for i in path.iris)
+            in_list = ", ".join(sql_lit(i) for i in path.iris)
             self._pending_scan_filters.append(
-                f"(`{pv}` NOT IN ({in_list}))")
+                f"({sql_ident(pv)} NOT IN ({in_list}))")
             return [(subj, "?" + pv, obj)]
         if isinstance(path, PathSeq):
             out: List[Tuple[str, str, str]] = []
@@ -1744,20 +1752,20 @@ class _Parser:
     def _as_encoded(self, operand) -> str:
         kind, val = operand
         if kind == self._VAR:
-            return _col(val)
+            return sql_ident(val)
         if kind == self._IRI:
             return f"concat('<', {val}, '>')"
         if kind == self._ENC:
             return val
         assert kind == self._TERM, kind
-        return _sql_str(val)
+        return sql_lit(val)
 
     def _as_lexical(self, operand) -> str:
         kind, val = operand
         if kind == self._VAR:
             return _lex_sql(val)
         if kind == self._TERM:
-            return _sql_str(_term_lexical(val))
+            return sql_lit(_term_lexical(val))
         if kind == self._ENC:
             return _lex_sql_of(val)
         return val  # _LEX (an SQL expression) / _NUMERIC
@@ -1814,10 +1822,10 @@ class _Parser:
             (a,) = self._fn_args(name, 1, 1)
             if a[0] != self._VAR:
                 raise SPARQLError("LANG takes a variable")
-            c = _col(a[1])
+            c = sql_ident(a[1])
             return (self._LEX,
-                    f"(CASE WHEN {c} RLIKE '^\"(?:[^\"\\\\\\\\]|"
-                    f"\\\\\\\\.)*\"@' THEN regexp_extract({c}, "
+                    f"(CASE WHEN {c} RLIKE {_LANG_TAGGED} THEN "
+                    f"regexp_extract({c}, "
                     f"'@([A-Za-z0-9-]+)$', 1) ELSE '' END)")
         if name == "STRLEN":
             (a,) = self._fn_args(name, 1, 1)
@@ -1843,7 +1851,7 @@ class _Parser:
                         "REGEX flags other than combinations of i/s/m "
                         "are outside the supported subset")
                 pat = f"(?{flags})" + pat
-            return (self._BOOL, f"({subj} RLIKE {_sql_str(pat)})")
+            return (self._BOOL, f"({subj} RLIKE {sql_lit(pat)})")
         if name == "CONCAT":
             args = self._fn_args(name, 1, 64)
             parts = ", ".join(self._as_lexical(a) for a in args)
@@ -1852,7 +1860,7 @@ class _Parser:
             (a,) = self._fn_args(name, 1, 1)
             if a[0] != self._VAR:
                 raise SPARQLError("BOUND takes a variable")
-            return (self._BOOL, f"({_col(a[1])} IS NOT NULL)")
+            return (self._BOOL, f"({sql_ident(a[1])} IS NOT NULL)")
         if name == "LANGMATCHES":
             a, b = self._fn_args(name, 2, 2)
             if b[0] != self._TERM or not b[1].startswith('"'):
@@ -1864,13 +1872,12 @@ class _Parser:
                 return (self._BOOL, f"({la} != '')")
             # RFC 4647 basic filtering: exact tag or subtag prefix
             return (self._BOOL,
-                    f"({la} = {_sql_str(rng)} OR "
-                    f"startswith({la}, {_sql_str(rng + '-')}))")
+                    f"({la} = {sql_lit(rng)} OR "
+                    f"startswith({la}, {sql_lit(rng + '-')}))")
         if name in ("STRDT", "STRLANG"):
             a, b = self._fn_args(name, 2, 2)
             lex = self._as_lexical(a)
-            esc = (f"replace(replace({lex}, '\\\\', '\\\\\\\\'), "
-                   f"'\"', '\\\\\"')")
+            esc = _nt_escape_sql(lex)
             if name == "STRDT":
                 if b[0] != self._TERM or not b[1].startswith("<"):
                     raise SPARQLError(
@@ -1887,7 +1894,7 @@ class _Parser:
                         "language tag")
                 suffix = f'"@{tag}'
             return (self._ENC,
-                    f"concat('\"', {esc}, {_sql_str(suffix)})")
+                    f"concat('\"', {esc}, {sql_lit(suffix)})")
         if name == "COALESCE":
             args = self._fn_args(name, 1, 64)
             if any(a[0] == self._BOOL for a in args):
@@ -1968,14 +1975,14 @@ class _Parser:
                         "are outside the supported subset")
                 pat = f"(?{flags})" + pat
             return (self._LEX,
-                    f"regexp_replace({src}, {_sql_str(pat)}, "
-                    f"{_sql_str(rep)})")
+                    f"regexp_replace({src}, {sql_lit(pat)}, "
+                    f"{sql_lit(rep)})")
         if name == "DATATYPE":
             (a,) = self._fn_args(name, 1, 1)
             if a[0] != self._VAR:
                 raise SPARQLError("DATATYPE takes a variable")
-            c = _col(a[1])
-            ext = f"regexp_extract({c}, '\\\\^\\\\^<([^>]*)>$', 1)"
+            c = sql_ident(a[1])
+            ext = f"regexp_extract({c}, {_DATATYPE_TAG}, 1)"
             # literal → its datatype IRI (typed: the tag; lang-tagged:
             # rdf:langString; plain: xsd:string); non-literal → NULL
             # (SPARQL type error, the row drops out of comparisons)
@@ -1994,7 +2001,7 @@ class _Parser:
             (a,) = self._fn_args(name, 1, 1)
             if a[0] != self._VAR:
                 raise SPARQLError(f"{name} takes a variable")
-            c = _col(a[1])
+            c = sql_ident(a[1])
             pref = {"ISIRI": "<", "ISURI": "<", "ISLITERAL": '"',
                     "ISBLANK": "_"}[name]
             return (self._BOOL, f"(substring({c}, 1, 1) = '{pref}')")
@@ -2014,9 +2021,20 @@ class _Parser:
 
 # ------------------------------------------------------- SQL fragments
 
+# regular expressions over the engine's term encoding, as SQL constants
+# (through ``sql_lit``: the same text under either setting of
+# ``spark.sql.parser.escapedStringLiterals``)
+_LITERAL_BODY = sql_lit(r'^"((?:[^"\\]|\\.)*)"')  # a literal's quoted body
+_LANG_TAGGED = sql_lit(r'^"(?:[^"\\]|\\.)*"@')  # a language-tagged literal
+_DATATYPE_TAG = sql_lit(r"\^\^<([^>]*)>$")  # a typed literal's datatype IRI
+_BACKSLASH_ESCAPE = sql_lit(r"\\(.)")  # one N-Triples backslash escape
 
-def _col(var: str) -> str:
-    return f"`{var}`"
+
+def _nt_escape_sql(lex: str) -> str:
+    """SQL applying the N-Triples ``\\`` and ``\"`` escapes to a lexical
+    form (the inverse of ``_BACKSLASH_ESCAPE``'s unescape)."""
+    return (f"replace(replace({lex}, {sql_lit(chr(92))}, "
+            f"{sql_lit(chr(92) * 2)}), '\"', {sql_lit(chr(92) + chr(34))})")
 
 
 def _refs_any(sql: str, names) -> bool:
@@ -2026,11 +2044,7 @@ def _refs_any(sql: str, names) -> bool:
     cannot misclassify the fragment."""
     masked = re.sub(
         r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", "''", sql)
-    return any(f"`{v}`" in masked for v in names)
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return any(sql_ident(v) in masked for v in names)
 
 
 def _unescape(body: str) -> str:
@@ -2052,7 +2066,7 @@ def _term_lexical(term: str) -> str:
 
 def _lex_sql(var: str) -> str:
     """SQL expression for a variable's lexical form (SPARQL ``STR``)."""
-    return _lex_sql_of(_col(var))
+    return _lex_sql_of(sql_ident(var))
 
 
 def _lex_sql_of(c: str) -> str:
@@ -2067,9 +2081,8 @@ def _lex_sql_of(c: str) -> str:
         f"(CASE WHEN substring({c}, 1, 1) = '<' "
         f"THEN substring({c}, 2, length({c}) - 2) "
         f"WHEN substring({c}, 1, 1) = '\"' "
-        f"THEN regexp_replace(regexp_extract({c}, "
-        f"'^\"((?:[^\"\\\\\\\\]|\\\\\\\\.)*)\"', 1), "
-        f"'\\\\\\\\(.)', '$1') "
+        f"THEN regexp_replace(regexp_extract({c}, {_LITERAL_BODY}, 1), "
+        f"{_BACKSLASH_ESCAPE}, '$1') "
         f"ELSE {c} END)")
 
 
@@ -2202,8 +2215,9 @@ def _seeded_reach(edges: DataFrame, seed: str) -> DataFrame:
                 .select(F.col("_b").alias("_n")).distinct())
         frontier = (step.join(reached, on="_n", how="left_anti")
                     .localCheckpoint(eager=True))
-        reached = (reached.unionByName(frontier).distinct()
-                   .localCheckpoint(eager=True))
+        # every frontier is distinct and disjoint from all earlier ones
+        # (the anti-join), so their plain union is already a set
+        reached = reached.unionByName(frontier)
     return reached
 
 
@@ -2263,11 +2277,11 @@ def _bind_encode_sql(kind: str, sql: str) -> str:
     a lexical becomes a plain literal (N-Triples \\ and \" escapes
     applied), an integer expression an xsd:integer literal."""
     if kind == _Parser._VAR:
-        return _col(sql)
+        return sql_ident(sql)
     if kind == _Parser._ENC:
         return sql
     if kind == _Parser._TERM:
-        return _sql_str(sql)
+        return sql_lit(sql)
     if kind == _Parser._IRI:
         return f"concat('<', {sql}, '>')"
     if kind == _Parser._NUMERIC:
@@ -2284,9 +2298,7 @@ def _bind_encode_sql(kind: str, sql: str) -> str:
         return ("concat('\"', CAST(" + sql + " AS STRING), "
                 f"'\"^^<http://www.w3.org/2001/XMLSchema#{dt}>')")
     assert kind == _Parser._LEX, kind
-    esc = (f"replace(replace({sql}, '\\\\', '\\\\\\\\'), "
-           f"'\"', '\\\\\"')")
-    return f"concat('\"', {esc}, '\"')"
+    return f"concat('\"', {_nt_escape_sql(sql)}, '\"')"
 
 
 def _run_bgp(triples, patterns, filters, stats) -> DataFrame:
@@ -2479,8 +2491,8 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
 
 # xsd numeric datatypes whose typed literals ORDER BY compares by VALUE
 # (SPARQL operator mapping: "9"^^xsd:integer < "10"^^xsd:integer)
-_XSD_NUMERIC_DT_RE = (
-    r'\\^\\^<http://www\\.w3\\.org/2001/XMLSchema#'
+_XSD_NUMERIC_DT_RE = sql_lit(
+    r'\^\^<http://www\.w3\.org/2001/XMLSchema#'
     r'(?:integer|decimal|double|float|long|int|short|byte|'
     r'nonNegativeInteger|nonPositiveInteger|negativeInteger|'
     r'positiveInteger|unsignedLong|unsignedInt|unsignedShort|'
@@ -2497,7 +2509,7 @@ def _order_keys(v: str, asc: bool):
     by codepoint).  TRY_CAST so a malformed numeric lexical degrades to
     the lexical fallback instead of an ANSI cast error."""
     num = F.expr(
-        f"CASE WHEN {_col(v)} RLIKE '{_XSD_NUMERIC_DT_RE}' "
+        f"CASE WHEN {sql_ident(v)} RLIKE {_XSD_NUMERIC_DT_RE} "
         f"THEN TRY_CAST({_lex_sql(v)} AS DOUBLE) END")
     enc = F.col(v)
     if asc:
@@ -2543,8 +2555,8 @@ def _agg_column(a: Aggregate):
         lex_of_t = _lex_sql_of("t")
         sep = a.sep if a.sep is not None else " "
         return F.expr(
-            f"array_join(sort_array(transform({coll}(`{a.var}`), "
-            f"t -> {lex_of_t})), {_sql_str(sep)})").alias(a.alias)
+            f"array_join(sort_array(transform({coll}({sql_ident(a.var)}), "
+            f"t -> {lex_of_t})), {sql_lit(sep)})").alias(a.alias)
     # numeric aggregates over the lexical form; TRY_CAST skips
     # non-numeric terms (SPARQL's error-term elision in SUM/AVG/MIN/MAX)
     num = F.expr(f"TRY_CAST({_lex_sql(a.var)} AS DOUBLE)")
@@ -2627,23 +2639,32 @@ def sparql_describe(triples: DataFrame, query: str, stats=None) -> DataFrame:
     """SPARQL DESCRIBE (implementation-defined by spec; ours is the
     subject-centric description): every triple whose SUBJECT is one of
     the described resources — explicit IRIs, plus the distinct values
-    each DESCRIBE variable takes over the WHERE solutions. One
-    resource-set build + one ``left_semi`` join against the triples
-    table; returns (s, p, o[, g]) in the engine encoding, writable by
-    the sinks like a CONSTRUCT result."""
+    each DESCRIBE variable takes over the WHERE solutions. Returns
+    (s, p, o[, g]) in the engine encoding, writable by the sinks like a
+    CONSTRUCT result.
+
+    When every described term is a constant the answer is one
+    ``s IN (...)`` filter, which reaches the scan as a pushed predicate:
+    no exchange and no driver-built frame. (A ``left_semi`` join against
+    a frame of constants plans as a sort-merge join that hash-exchanges
+    the whole table before AQE can demote it to a broadcast.) A DESCRIBE
+    naming variables builds the resource set — its constants plus the
+    variables' WHERE solutions — and semi-joins the table against it."""
     pq = parse_select(query)
     if pq.form != "DESCRIBE":
         raise SPARQLError(f"sparql_describe got a {pq.form} query")
+    consts = list(dict.fromkeys(
+        t for t in pq.describe_terms if not is_var(t)))
+    var_names = [t[1:] for t in pq.describe_terms if is_var(t)]
+    if not var_names:
+        return triples.filter(F.col("s").isin(consts))
     frames = []
-    consts = [t for t in pq.describe_terms if not is_var(t)]
     if consts:
         frames.append(triples.sparkSession.createDataFrame(
             [(c,) for c in consts], ["_r"]))
-    var_names = [t[1:] for t in pq.describe_terms if is_var(t)]
-    if var_names:
-        sols = _bindings(triples, pq, stats)
-        for v in var_names:
-            frames.append(sols.select(F.col(v).alias("_r")))
+    sols = _bindings(triples, pq, stats)
+    for v in var_names:
+        frames.append(sols.select(F.col(v).alias("_r")))
     res = frames[0]
     for f in frames[1:]:
         res = res.unionByName(f)

@@ -322,6 +322,9 @@ ORACLE_ANN_LSH_BUCKETS = _lsh_buckets_oracle()
 LSH_NEARDUP_THRESHOLD = 0.9
 LSH_NEARDUP_BANDS = 16
 LSH_NEARDUP_BITS = 10
+# the most float32 embedding elements (≈256 MB) lsh_cosine_neardup collects
+# to the driver for its prune instead of attaching vectors by join
+CAPTURE_MAX_ELEMS = 64_000_000
 
 
 def lsh_cosine_neardup(emb: DataFrame,
@@ -422,7 +425,11 @@ def lsh_cosine_neardup(emb: DataFrame,
     # row. float32 round-off on a 64-dim cosine is bounded well under 1e-5;
     # the prune margin is 100× wider, so no pair the exact float64 filter
     # would keep can be pruned.
-    n_emb_hint = emb.limit(BROADCAST_MAX_ROWS + 1).count()
+    # one bounded probe serves both gates: it counts past whichever
+    # ceiling is higher, so neither reads a capped count as "small"
+    capture_max_rows = CAPTURE_MAX_ELEMS // dim
+    n_emb_hint = emb.limit(
+        max(BROADCAST_MAX_ROWS, capture_max_rows) + 1).count()
     prune_margin = 1e-3
 
     # Candidate rows are (vec_a, vec_b) — 16 bytes. Attaching both float32
@@ -432,13 +439,14 @@ def lsh_cosine_neardup(emb: DataFrame,
     # matrix itself is small, ship IT once per task inside the prune
     # closure instead and keep the candidate stream id-only — guide §8:
     # move decisions over a lightweight proxy, attach payloads exactly
-    # once. Ceiling: 64M float32 elements ≈ 256 MB — the attach path under
-    # BROADCAST_MAX_ROWS holds the same bytes TWICE (one broadcast per
-    # side), so the single captured copy is strictly lighter; above the
+    # once. Ceiling: CAPTURE_MAX_ELEMS float32 elements — the attach path
+    # under BROADCAST_MAX_ROWS holds the same bytes TWICE (one broadcast
+    # per side), so the single captured copy is strictly lighter; above the
     # ceiling the attach-join shape (broadcast or AQE shuffle join) is the
-    # scale-safe fallback.
+    # scale-safe fallback. An empty table has nothing to capture (and
+    # np.stack of no rows raises).
     captured = None
-    if n_emb_hint * dim <= 64_000_000:
+    if 0 < n_emb_hint * dim <= CAPTURE_MAX_ELEMS:
         epdf = emb.select(
             "vec_id",
             F.col("embedding").cast("array<float>").alias("e")).toPandas()

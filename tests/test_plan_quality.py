@@ -363,3 +363,60 @@ def test_sparql_query_plan_is_pruned_sink_scan(spark):
     plan = plan_of(kg_sparql_notexists(spark, SF_DIR))
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def _lsh_embeddings(spark, n_pairs: int, dim: int):
+    """``n_pairs`` random vectors plus a near-copy of each: every copy pair
+    is a near-duplicate."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(n_pairs, dim))
+    vecs = np.vstack([base, base + rng.normal(scale=1e-3, size=base.shape)])
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>")
+
+
+def test_lsh_capture_gate_holds_its_element_ceiling(spark, monkeypatch):
+    """The embedding matrix is collected to the driver only when all of it
+    fits under CAPTURE_MAX_ELEMS — also when that ceiling, in rows, lies
+    above the broadcast row ceiling (a probe capped there would read any
+    larger corpus as fitting)."""
+    from pyrml_spark.ops import similarity as S
+    from pyrml_spark.plans import tuning
+
+    dim, n_pairs = 4, 25
+    emb = _lsh_embeddings(spark, n_pairs, dim)
+    expected = sorted(tuple(r) for r in S.lsh_cosine_neardup(
+        emb, dim=dim).collect())
+    assert {(i, i + n_pairs) for i in range(n_pairs)} <= {
+        (a, b) for a, b, _ in expected}
+
+    collected = []
+    frame_cls = type(emb)  # the session's concrete DataFrame class
+    to_pandas = frame_cls.toPandas
+
+    def counting(self):
+        collected.append(1)
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame_cls, "toPandas", counting)
+    monkeypatch.setattr(tuning, "BROADCAST_MAX_ROWS", 10)
+    # one row past the ceiling: attached by join, nothing collected
+    monkeypatch.setattr(S, "CAPTURE_MAX_ELEMS", dim * (2 * n_pairs - 1))
+    out = sorted(tuple(r) for r in S.lsh_cosine_neardup(
+        emb, dim=dim).collect())
+    assert not collected and out == expected
+    # exactly at the ceiling: captured once
+    monkeypatch.setattr(S, "CAPTURE_MAX_ELEMS", dim * 2 * n_pairs)
+    out = sorted(tuple(r) for r in S.lsh_cosine_neardup(
+        emb, dim=dim).collect())
+    assert len(collected) == 1 and out == expected
+
+
+def test_lsh_neardup_of_no_embeddings_is_empty(spark):
+    from pyrml_spark.ops.similarity import lsh_cosine_neardup
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert lsh_cosine_neardup(emb, dim=4).collect() == []
